@@ -60,105 +60,56 @@ CORE = [
     "graph_pagerank_trading",
 ]
 
-def _load_core_prev() -> dict[str, "float | None"]:
-    """Last driver-recorded sf0.1 value per CORE query, read from the
-    newest BENCH_r{N}.json in the repo root (the driver writes one per
-    round with the parsed bench line under "parsed"). A pin absent from
-    the previous round (newly added, or that round's line truncated)
-    gets None and drops out of the comparable-core totals. With no
-    artifact at all (fresh clone) every pin is None and
-    core_prev_total is 0 over an empty comparable set."""
+def _newest_bench_record(root: str) -> dict:
+    """The parsed bench line (``"parsed"``) of the newest BENCH_r{N}.json
+    in ``root``, newest by numeric N (one is recorded per round).
+    {} with no artifact (fresh clone) or an unreadable one."""
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
     best, best_n = None, -1
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
+    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
         m = re.search(r"BENCH_r(\d+)\.json$", p)
         if m and int(m.group(1)) > best_n:
             best, best_n = p, int(m.group(1))
-    prev_q: dict = {}
-    if best is not None:
-        try:
-            with open(best) as fh:
-                doc = json.load(fh)
-            prev_q = (doc.get("parsed") or {}).get("queries") or {}
-        except (OSError, ValueError):
-            prev_q = {}
-    return {n: prev_q.get(n) for n in CORE}
+    if best is None:
+        return {}
+    try:
+        with open(best) as fh:
+            parsed = json.load(fh).get("parsed")
+    except (OSError, ValueError, AttributeError):
+        return {}
+    return parsed if isinstance(parsed, dict) else {}
 
 
-CORE_PREV = _load_core_prev()
+_PREV_RECORD = _newest_bench_record(os.path.dirname(os.path.abspath(__file__)))
+
+# Last recorded sf0.1 value per CORE query. A pin absent from the
+# previous round (newly added, or that round's line truncated) gets None
+# and drops out of the comparable-core totals; with no artifact at all
+# every pin is None and core_prev_total is 0 over an empty comparable set.
+CORE_PREV = {n: (_PREV_RECORD.get("queries") or {}).get(n) for n in CORE}
 
 
 def _load_calib_prev() -> "float | None":
-    """Last driver-recorded calibration_sec, from the newest BENCH_r{N}.json
-    (same discovery as _load_core_prev). None before the probe's first
+    """Last recorded calibration_sec; None before the probe's first
     recorded round."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best, best_n = None, -1
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = p, int(m.group(1))
-    if best is None:
-        return None
     try:
-        with open(best) as fh:
-            doc = json.load(fh)
-        v = (doc.get("parsed") or {}).get("calibration_sec")
-        return float(v) if v is not None else None
-    except (OSError, ValueError, TypeError):
+        return float(_PREV_RECORD["calibration_sec"])
+    except (KeyError, TypeError, ValueError):
         return None
-
-
-# The r12 DRIVER bench run's per-shape probes (the last
-# calibration_multi_history entry the round-12 driver commit merged into
-# BENCH_SAMPLES.json, epoch 1786919294) — the box state at the moment the
-# r12 CORE_PREV numbers were recorded. Used ONLY for the r12->r13
-# transition, because BENCH_r12.json predates calibration_multi landing
-# on the printed line; from r13 on the newest BENCH_r{N}.json carries the
-# probes and this constant is dead code.
-_CALIB_MULTI_R12_DRIVER = {
-    "cpu": 0.155,
-    "shuffle": 0.846,
-    "pyudf": 0.442,
-    "membw": 2.934,
-}
 
 
 def _load_calib_multi_prev() -> "dict[str, float] | None":
-    """Previous DRIVER round's per-shape probes (cpu/shuffle/pyudf/membw),
-    for the drift-class normalization (r12 verdict item 3). Source: the
-    newest BENCH_r{N}.json's ``calibration_multi`` (on the printed line
-    from round 13 on). Transition fallback: the pinned r12 driver-run
-    probes above — NOT the BENCH_SAMPLES history tail, which any local
-    bench run overwrites and which must stay time-matched to CORE_PREV's
-    driver-recorded values. None only without any BENCH_r artifact
-    (fresh clone) — normalization then falls back to the scalar probe."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best, best_n = None, -1
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and int(m.group(1)) > best_n:
-            best, best_n = p, int(m.group(1))
-    if best is None:
-        return None
+    """Previous round's recorded per-shape probes (cpu/shuffle/pyudf/membw),
+    for the drift-class normalization. None without a recorded
+    ``calibration_multi`` — normalization then falls back to the scalar
+    probe."""
+    v = _PREV_RECORD.get("calibration_multi")
     try:
-        with open(best) as fh:
-            doc = json.load(fh)
-        v = (doc.get("parsed") or {}).get("calibration_multi")
-        if isinstance(v, dict) and v:
-            return {k: float(x) for k, x in v.items()}
-    except (OSError, ValueError, TypeError):
-        pass
-    return dict(_CALIB_MULTI_R12_DRIVER)
+        return {k: float(x) for k, x in v.items()} if v else None
+    except (AttributeError, TypeError, ValueError):
+        return None
 
 
 def calibration_probe(spark, sf_dir: str) -> float:
@@ -436,34 +387,6 @@ def calibration_probes_multi(spark) -> dict[str, float]:
         out[key] = min(runs)
     return out
 
-# Queries whose plans consume the session-scoped CC-label memo
-# (plans/pipeline_common.py _CC_LABELS_CACHE): with several in HEADLINE
-# or a ROTATING slice and every rep sharing one session, rep 1 of the
-# first builds the labels and every later rep — including the recorded
-# min for ALL of them — would measure only a checkpointed-label scan
-# (r11 verdict item 2 / advice medium: a spurious ~100x "speedup"). The
-# bench clears the memo before EVERY rep of these so the recorded min is
-# a cold LSH+CC build, and records one extra warm rep in the
-# BENCH_SAMPLES sidecar (warm_memo_sec) so the cache-hit operating point
-# stays visible. This set must cover EVERY registered query that calls
-# pipeline_common.cluster_labels_lsh (r12 verdict item 2; enforced by
-# tests/test_bench_contract.py), not just the ones currently in
-# HEADLINE — otherwise the first rotation that includes a consumer
-# records a warm memo scan as the query cost.
-MEMOIZED = {
-    "dedup_cluster_assign",
-    "dedup_cluster_representative",
-    "dedup_cluster_labels",
-    "dedup_survivorship_by_source",
-}
-
-
-def _clear_session_memos() -> None:
-    from nfl_big_data_bowl_2024_spark.plans import pipeline_common
-
-    pipeline_common._CC_LABELS_CACHE.clear()
-
-
 # Queries that showed multi-second shared-box spikes in past driver runs
 # (BENCH_r03: sim_topk_bruteforce x4.7, doc_pack_context_windows x2.9 — both
 # noise on re-measure) or that pay Arrow/kernel dispatch: extra reps so one
@@ -581,8 +504,7 @@ def sf10_graph_mode() -> None:
 SF10_SWEEP_DEFAULT = [
     "dedup_cluster_assign",
     "dedup_cluster_representative",
-    # round-12 registration: the full-corpus label relation (labels +
-    # doc-spine left join) — swept beside its two consumers
+    # the full-corpus label relation (labels + doc-spine left join)
     "dedup_cluster_labels",
     "dedup_ngram_jaccard",
     "txt_ngram_novelty",
@@ -595,9 +517,7 @@ SF10_SWEEP_DEFAULT = [
 def sf10_sweep_mode(names: list[str], key: str) -> None:
     """Run each named query at the generated sf10 point, ONE FRESH
     SparkSession per query, and merge {key: record} into
-    BENCH_SAMPLES.json. Queries that share a session-scoped
-    materialization (the dedup cluster pair) are additionally run in one
-    shared session afterwards so the record shows both operating points."""
+    BENCH_SAMPLES.json."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF10_DIR", "/tmp/scaledata/sf10")
     if not os.path.isdir(sf_dir):
         print(json.dumps({"metric": key, "value": None, "unit": "sec",
@@ -639,32 +559,6 @@ def sf10_sweep_mode(names: list[str], key: str) -> None:
                  "timings": timings}
     if errors:
         rec["errors"] = errors
-    # Shared-label operating point: every consumer of the memoized CC
-    # label relation in ONE session (the intended 100 TB composition —
-    # labels materialized once, each further consumer pays only its own
-    # derivation: representative's grouped max_by, labels' doc-spine
-    # join, survivorship's rep-flag join + fold).
-    consumers = [
-        "dedup_cluster_assign",
-        "dedup_cluster_representative",
-        "dedup_cluster_labels",
-        "dedup_survivorship_by_source",
-    ]
-    if {"dedup_cluster_assign", "dedup_cluster_representative"} <= set(names):
-        spark = get_spark("bench-sf10-sweep-shared")
-        spark.sparkContext.setLogLevel("ERROR")
-        shared: dict[str, float] = {}
-        try:
-            for name in consumers:
-                t0 = time.time()
-                all_queries()[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                shared[name] = round(time.time() - t0, 1)
-            rec["cluster_shared_session"] = shared
-        except Exception as exc:
-            rec["cluster_shared_session_error"] = str(exc).split("\n")[0][:200]
-        spark.stop()
     _merge_bench_samples({key: rec})
     line: dict = {"metric": key, "value": rec["total_sec"], "unit": "sec",
                   "queries": timings}
@@ -758,27 +652,15 @@ def main() -> None:
     # were pure noise). Noise-prone/kernel-heavy queries get 5 reps.
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
-    warm_memo: dict[str, float] = {}
     for name in HEADLINE:
         reps = 5 if name in NOISY else 3
         runs: list[float] = []
         for _ in range(reps):
-            if name in MEMOIZED:
-                _clear_session_memos()
             t0 = time.time()
             registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(round(time.time() - t0, 3))
         samples[name] = runs
         timings[name] = min(runs)
-        if name in MEMOIZED:
-            # one warm rep on the memo just built: the cache-hit operating
-            # point, sidecar-only (the headline min above is cold-build)
-            t0 = time.time()
-            registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            warm_memo[name] = round(time.time() - t0, 3)
-            _clear_session_memos()
 
     name = "scd2_upsert"
     samples[name] = [round(bench_scd2_upsert(spark, sf_dir), 3) for _ in range(3)]
@@ -814,12 +696,6 @@ def main() -> None:
 
     core_total_normalized = round(
         sum(timings[n] * _norm_factor(n) for n in comparable), 2
-    )
-    # the pre-r13 scalar-probe normalization, kept for trend continuity
-    core_total_normalized_cpu = (
-        round(core_total * calib_prev / calib, 2)
-        if (calib_prev is not None and calib > 0)
-        else core_total
     )
 
     # The driver's artifact keeps only the LAST 2000 characters of stdout and
@@ -861,7 +737,6 @@ def main() -> None:
                 n: {"now": timings[n], "prev": CORE_PREV[n]}
                 for n in CORE
             },
-            "warm_memo_sec": warm_memo,
             "calibration": {"now": calib, "prev": calib_prev},
             "calibration_multi": calib_multi,
             "calibration_multi_history": multi_hist,
@@ -897,14 +772,12 @@ def main() -> None:
             # round (round-8 verdict item 2). Since r13 the headline
             # normalization is PER DRIFT CLASS (cpu/shuffle/pyudf/membw
             # probe per query shape — r12 verdict item 3);
-            # core_total_normalized_cpu keeps the old scalar basis for
-            # trend continuity, and calibration_multi puts this run's
-            # class probes on the driver record so the next round can
-            # normalize driver-to-driver.
+            # calibration_multi puts this run's class probes on the
+            # round's record so the next round can normalize against
+            # them.
             "calibration_sec": calib,
             "calibration_multi": calib_multi,
             "core_total_normalized": core_total_normalized,
-            "core_total_normalized_cpu": core_total_normalized_cpu,
             "queries": {
                 n: (round(v, 2) if v < 10 else int(round(v)))
                 for n, v in timings.items()

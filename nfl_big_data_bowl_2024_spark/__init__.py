@@ -9,8 +9,9 @@ Layout:
     functions  -- scalar column function families (spatial F1-F3)
     operators  -- window/ordered ops (W1-W5), dedup, similarity search
     kernels    -- numpy LQR pursuit solver (U2) + the U1 YAP applyInPandas kernel
-    plans      -- registered queries: relational (§2.1-2.7), pipeline_ops
-                  (dedup/similarity/text), domain (E1/E2), reporting (E3)
+    plans      -- registered queries: relational (§2.1-2.7), pipeline_*
+                  family modules (dedup/similarity/text/graph/...),
+                  domain (E1/E2), reporting (E3)
 """
 
 __version__ = "0.1.0"

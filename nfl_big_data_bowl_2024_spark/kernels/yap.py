@@ -31,16 +31,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import types as T
 
+from ..schemas import FALLBACK_START_EVENT, START_EVENTS, STOP_EVENTS
 from .lqr import RiccatiSweep, solve_optimal_path
 
 R_T = 1.0  # vicinity radius (reference optimal_pursuit.py:126 default R_t=1.0)
-
-START_EVENTS = ("handoff", "pass_outcome_caught", "run", "snap_direct")
-FALLBACK_START = "ball_snap"
-STOP_EVENTS = (
-    "tackle", "out_of_bounds", "fumble", "qb_slide",
-    "touchdown", "safety", "fumble_defense_recovered",
-)
 
 YAP_RESULT_SCHEMA = T.StructType(
     [
@@ -60,7 +54,7 @@ YAP_RESULT_SCHEMA = T.StructType(
 def _identify_events(events: np.ndarray) -> tuple[int | None, int | None]:
     """Positional (start, stop) indices; None where the reference raises."""
     start = None
-    for s in (START_EVENTS, (FALLBACK_START,)):
+    for s in (START_EVENTS, (FALLBACK_START_EVENT,)):
         hits = np.nonzero(np.isin(events, s))[0]
         if hits.size:
             start = int(hits[0])

@@ -3,7 +3,7 @@
 All shingling/hashing runs JVM-side (higher-order array functions + murmur3/
 xxhash64) — no Python in the hot path. Shapes:
 
-  exact         one shuffle on the text fingerprint (see plans.pipeline_ops)
+  exact         one shuffle on the text fingerprint (see plans.pipeline_txt)
   n-gram Jaccard  shingle -> explode -> self-join on shingle -> overlap counts
   MinHash+LSH   shingle -> 32 permuted min-hashes -> banded bucket join ->
                 exact-Jaccard verification of candidates only

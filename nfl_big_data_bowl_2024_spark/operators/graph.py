@@ -138,7 +138,11 @@ def _cc_union_find_local(spark, e: DataFrame) -> DataFrame:
     min-label fixpoint's answer. Input ``e`` is the materialized
     two-column (src, dst) relation; output is an Arrow-backed local
     relation (LocalTableScan — no Python boundary on the consumer side)
-    with the input's node type preserved."""
+    with the input's node type preserved.
+
+    A NULL endpoint matches the distributed arm: the edge joins nothing
+    (equi-joins never match NULL), its other endpoint is still a node,
+    and NULL itself is one node labelled NULL."""
     tbl = e.toArrow()
     srcs = tbl.column("src").to_pylist()
     dsts = tbl.column("dst").to_pylist()
@@ -153,6 +157,8 @@ def _cc_union_find_local(spark, e: DataFrame) -> DataFrame:
         return r
 
     for a, b in zip(srcs, dsts):
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra == rb:
             continue
@@ -161,7 +167,9 @@ def _cc_union_find_local(spark, e: DataFrame) -> DataFrame:
         parent[rb] = ra  # larger root under smaller: root stays the MIN
     nodes = set(srcs)
     nodes.update(dsts)
-    rows = sorted((n, find(n)) for n in nodes)
+    rows = sorted((n, find(n)) for n in nodes if n is not None)
+    if None in nodes:
+        rows.append((None, None))
     ftype = e.schema["src"].dataType
     schema = T.StructType(
         [

@@ -265,8 +265,13 @@ def _kernel_input(
     tackles: DataFrame,
 ) -> DataFrame:
     """Shared grouped-map input: carrier + tackler frames with role flags,
-    player dims and (broadcast-joined) position limits as columns."""
+    player dims and (broadcast-joined) position limits as columns. The
+    kernels read time as ``t`` seconds; a tracking scan that carries only
+    the ``time`` timestamp (``sources.readers.read_tracking``) gets ``t``
+    derived from it."""
     spark = tracking.sparkSession
+    if "t" not in tracking.columns:
+        tracking = tracking.withColumn("t", F.unix_micros("time") / 1e6)
     limits = _local(
         spark, schemas.POSITION_LIMITS, schemas.POSITION_LIMITS_SCHEMA
     )

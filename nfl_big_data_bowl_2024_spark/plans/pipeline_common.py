@@ -1,5 +1,5 @@
 """Shared helpers, oracle-SQL fragments and constants for the
-pipeline_* family modules (split out of pipeline_ops.py, round 9).
+pipeline_* family modules (split along family seams, round 9).
 Every definition moved verbatim; see the family modules for the
 registered queries that use them."""
 
@@ -192,72 +192,22 @@ def _cluster_pairs_lsh(d: DataFrame) -> DataFrame:
     )
 
 
-# Session-scoped memo of the CC label relation: (applicationId, sf_dir,
-# data_fingerprint) -> eagerly-checkpointed labels DataFrame. At 100 TB the
-# duplicate-cluster labels are THE intermediate you materialize exactly once
-# and every dedup decision consumes; recomputing the LSH + fixpoint per
-# consumer pays the dominant cost (~105 s of each sf10 run) once per query
-# instead of once per session (verdict r10 item 2). Keyed on applicationId
-# so a fresh session never sees a stale entry, and on a file-stat
-# fingerprint of the documents tree so a regenerated/overwritten sf_dir
-# stops serving stale labels (r11 advice, low). Entries from other
-# applications are evicted on insert — stopped sessions no longer leak
-# DataFrame refs in long-lived processes.
-_CC_LABELS_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _docs_fingerprint(sf_dir: str) -> str:
-    """Cheap local-fs fingerprint of the documents table: file count +
-    total bytes + max mtime_ns over the parquet tree. Detects the
-    regenerate-in-place case path-keying cannot; costs only stat calls."""
-    import os
-
-    root = os.path.join(sf_dir, "documents.parquet")
-    n = total = mt = 0
-    if os.path.isdir(root):
-        for dirpath, _dirs, files in os.walk(root):
-            for fname in files:
-                st = os.stat(os.path.join(dirpath, fname))
-                n += 1
-                total += st.st_size
-                mt = max(mt, st.st_mtime_ns)
-    elif os.path.exists(root):
-        st = os.stat(root)
-        n, total, mt = 1, st.st_size, st.st_mtime_ns
-    return f"{n}:{total}:{mt}"
-
-
 def cluster_labels_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels (doc_id, component) over the banded-LSH
-    near-dup graph — built once per (session, sf_dir, data-fingerprint)
-    and shared by dedup_cluster_assign and dedup_cluster_representative.
-    The first call runs the LSH candidate generation + exact verify +
-    min-label fixpoint and eagerly localCheckpoints the result; later
-    calls return the materialized relation (no recompute, no re-scan)."""
+    near-dup graph, the relation every cluster-dedup decision consumes.
+    Runs the LSH candidate generation + exact verify + min-label fixpoint
+    and eagerly localCheckpoints the result, so a consumer that reads the
+    labels more than once does not recompute them. Each call builds anew:
+    a caller that wants the labels shared across queries persists the
+    returned DataFrame itself."""
     from ..operators.graph import connected_components
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, _docs_fingerprint(sf_dir))
-    got = _CC_LABELS_CACHE.get(key)
-    if got is not None:
-        return got
     d = _t(spark, sf_dir, "documents")
-    labels = (
+    return (
         connected_components(_cluster_pairs_lsh(d), "doc_a", "doc_b")
         .withColumnRenamed("node", "doc_id")
         .localCheckpoint(eager=True)
     )
-    # evict dead-application entries AND stale fingerprints of this
-    # sf_dir before inserting: the memo holds at most one live relation
-    # per (sf_dir, current data state)
-    for k in [
-        k
-        for k in _CC_LABELS_CACHE
-        if k[0] != app_id or (k[1] == sf_dir and k != key)
-    ]:
-        del _CC_LABELS_CACHE[k]
-    _CC_LABELS_CACHE[key] = labels
-    return labels
 
 
 def cluster_pairs_exact(d: DataFrame) -> DataFrame:
@@ -476,7 +426,8 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_t").alias("n_t"),
         F.count(F.lit(1)).alias("v"),
     )
-    n_r, n_t, v = int(lm_m["n_r"]), int(lm_m["n_t"]), int(lm_m["v"])
+    # sums over zero rows observe as None: an empty corpus has no counts
+    n_r, n_t, v = (int(lm_m[k] or 0) for k in ("n_r", "n_t", "v"))
     ratio = cp.select(
         "term",
         F.floor(

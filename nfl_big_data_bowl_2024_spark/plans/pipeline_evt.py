@@ -1,8 +1,7 @@
 """Event-stream analytics queries (evt_*, scd2_*, cdc_*, cogroup_*): sessionization, attribution, time-series decomposition, changelog/SCD reconciliation.
 
-Split out of plans/pipeline_ops.py along the registry's family seams
-(round-9; see pipeline_ops.py for the compatibility re-export and
-pipeline_common.py for shared helpers/oracle fragments). Original
+Split along the registry's family seams in round 9 (shared
+helpers/oracle fragments live in pipeline_common.py). Original
 docstrings, oracle SQL and reference citations moved verbatim.
 """
 

@@ -1,8 +1,7 @@
 """Graph and spatial queries (graph_*, spatial_*): PageRank/HITS, label propagation, k-core, reachability, proximity pairs.
 
-Split out of plans/pipeline_ops.py along the registry's family seams
-(round-9; see pipeline_ops.py for the compatibility re-export and
-pipeline_common.py for shared helpers/oracle fragments). Original
+Split along the registry's family seams in round 9 (shared
+helpers/oracle fragments live in pipeline_common.py). Original
 docstrings, oracle SQL and reference citations moved verbatim.
 """
 
@@ -41,8 +40,8 @@ from .pipeline_common import (  # noqa: F401
 
 def _table_tree_bytes(sf_dir: str, name: str) -> int:
     """Local-fs byte size of a table's parquet tree (stat calls only, no
-    Spark job) — the cheap scale signal the size-gated plan shapes key on,
-    same measurement the CC memo's fingerprint uses."""
+    Spark job) — the cheap scale signal the size-gated plan shapes key on.
+    0 means unknown (missing path or a non-local filesystem)."""
     import os
 
     root = os.path.join(sf_dir, f"{name}.parquet")
@@ -603,7 +602,8 @@ def graph_adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ORDER BY aa_micro DESC, k`` equals the oracle's
     ``ORDER BY aa_micro DESC, node_a, node_b`` and the top-25 tie-break
     stays exact; unpack is shiftright / mod after the limit. Measured
-    (scripts/ab_adamic_packed.py, committed record in PERF.md): 22-26%
+    (scripts/ab_adamic_packed.py, removed; last present at commit
+    7cba2a3; committed record in PERF.md): 22-26%
     faster at the generated sf1.0 (B 7.8/8.9 s vs A 10.0/12.5 s,
     probes flat, outputs hash-identical); real TPC-H ids keep the gate
     open to ~sf1000 (custkey*2 < 2^31). The generated sf10 tree's
@@ -1239,9 +1239,10 @@ def graph_copurchase_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # crossover is exactly where lineitem stops broadcasting, so the gate
     # keys on the same signal the planner does (input tree bytes vs the
     # session's 64 MB autoBroadcastJoinThreshold, conservatively halved
-    # for parquet-to-in-memory expansion).
+    # for parquet-to-in-memory expansion). An unknown size (0) takes the
+    # scale-safe collect_set arm.
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    if _table_tree_bytes(sf_dir, "lineitem") <= 32 * 1024 * 1024:
+    if 0 < _table_tree_bytes(sf_dir, "lineitem") <= 32 * 1024 * 1024:
         lid = li.distinct()
         a = lid.select(
             F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")

@@ -1,8 +1,7 @@
 """Dedup, similarity, embedding and multimodal queries (dedup_*, sim_*, emb_*, mm_*, pipeline_*, arr_*, json_*).
 
-Split out of plans/pipeline_ops.py along the registry's family seams
-(round-9; see pipeline_ops.py for the compatibility re-export and
-pipeline_common.py for shared helpers/oracle fragments); the ml_*
+Split along the registry's family seams in round 9 (shared
+helpers/oracle fragments live in pipeline_common.py); the ml_*
 family moved on to pipeline_ml.py in round 10. Original
 docstrings, oracle SQL and reference citations moved verbatim.
 """
@@ -1077,9 +1076,8 @@ def sim_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_dedup_similarity.py.",
 )
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Labels come from the session-scoped shared builder (pipeline_common.
-    # cluster_labels_lsh): the LSH + CC fixpoint is materialized once per
-    # (session, sf) and shared with dedup_cluster_representative.
+    # Labels come from the shared builder (pipeline_common.
+    # cluster_labels_lsh), the same one the other cluster-dedup queries use.
     return cluster_labels_lsh(spark, sf_dir)
 
 
@@ -1215,9 +1213,8 @@ def emb_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_cluster_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    # Shared session-scoped label relation (see dedup_cluster_assign): the
-    # ~105 s sf10 LSH+CC fixpoint is paid once per session, and this query
-    # adds only the n_chars join + one grouped max_by.
+    # Same label builder as dedup_cluster_assign; this query adds only
+    # the n_chars join + one grouped max_by.
     labels = cluster_labels_lsh(spark, sf_dir)
     m = labels.join(d.select("doc_id", "n_chars"), "doc_id")
     return m.groupBy("component").agg(
@@ -1240,9 +1237,9 @@ def dedup_cluster_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contamination audit) joins against; dedup_cluster_assign exposes "
     "only the edge-connected subset, so this entry is the hash gate and "
     "sf1 Spark-to-Spark parity anchor on the COMPLETE label map. Spark "
-    "side: the session-scoped memoized labels (cluster_labels_lsh — LSH "
-    "candidates + exact verify + min-label fixpoint, paid once per "
-    "(session, sf, data-fingerprint)) left-joined to the doc_id spine "
+    "side: the shared label builder (cluster_labels_lsh — LSH "
+    "candidates + exact verify + min-label fixpoint, eagerly "
+    "checkpointed) left-joined to the doc_id spine "
     "with coalesce(component, doc_id); one exchange on doc_id, labels "
     "already hashed on that key. Oracle: the shared exact-pair recursive "
     "CTE with the final SELECT swapped for the documents left join "
@@ -2226,9 +2223,8 @@ def sim_matryoshka_prefix_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     "themselves) — the data-valuation readout a curation pipeline "
     "reports per ingest source ('source X loses 31% of its docs to "
     "dedup'), complementing txt_ngram_novelty's additive-content view "
-    "with the subtractive one. THIRD consumer of the session-scoped "
-    "memoized label relation (pipeline_common.cluster_labels_lsh — "
-    "LSH + CC fixpoint paid once per session and shared with "
+    "with the subtractive one. Consumer of the shared label builder "
+    "(pipeline_common.cluster_labels_lsh — LSH + CC fixpoint, as in "
     "dedup_cluster_assign/_representative; this query adds one "
     "doc-spine left join, one grouped max_by per component, one "
     "left-semi-shaped flag join and a per-source fold). Oracle: the "

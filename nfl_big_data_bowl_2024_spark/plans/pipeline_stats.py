@@ -1,8 +1,7 @@
 """Data-quality, statistics and sketch queries (dq_*, stat_*, agg_*): profiling, drift, hypothesis tests, HLL/CMS/KMV/bitmap sketches, grouped aggregates.
 
-Split out of plans/pipeline_ops.py along the registry's family seams
-(round-9; see pipeline_ops.py for the compatibility re-export and
-pipeline_common.py for shared helpers/oracle fragments); the dq_*
+Split along the registry's family seams in round 9 (shared
+helpers/oracle fragments live in pipeline_common.py); the dq_*
 audit family moved on to pipeline_dq.py in round 10. Original
 docstrings, oracle SQL and reference citations moved verbatim.
 """

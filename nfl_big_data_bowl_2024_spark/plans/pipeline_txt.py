@@ -1,8 +1,7 @@
 """Text-analysis queries (txt_*): language ID, quality scoring, tokenization/BPE, fingerprinting, ranking, corpus statistics.
 
-Split out of plans/pipeline_ops.py along the registry's family seams
-(round-9; see pipeline_ops.py for the compatibility re-export and
-pipeline_common.py for shared helpers/oracle fragments); the doc_*
+Split along the registry's family seams in round 9 (shared
+helpers/oracle fragments live in pipeline_common.py); the doc_*
 curation family moved on to pipeline_doc.py in round 10. Original
 docstrings, oracle SQL and reference citations moved verbatim.
 """

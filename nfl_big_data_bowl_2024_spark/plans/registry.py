@@ -367,9 +367,7 @@ _DRIVER_PRIORITY: list[str] = [
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    # Import side-effect modules that populate the registry. The
-    # pipeline family modules (split out of pipeline_ops in round 9)
-    # register directly; pipeline_ops remains the compat re-export.
+    # Import side-effect modules that populate the registry.
     from . import relational  # noqa: F401
     from . import pipeline_txt  # noqa: F401
     from . import pipeline_doc  # noqa: F401

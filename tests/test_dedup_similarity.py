@@ -161,7 +161,7 @@ def test_winnow_fingerprint_matches_python_model(spark):
     short-document (< k chars) edge case."""
     import hashlib
 
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import txt_winnow_fingerprint
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_txt import txt_winnow_fingerprint
 
     texts = {
         1: "the quick brown fox jumps over the lazy dog",
@@ -222,10 +222,12 @@ def test_cluster_lsh_composition_matches_exact_audit_twin(spark):
     scale; the same equality was measured at sf0.1: 256 pairs / 477
     labels on both sides)."""
     from nfl_big_data_bowl_2024_spark.operators.graph import connected_components
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_common import (
         _cluster_pairs_lsh,
-        _t,
         cluster_pairs_exact,
+    )
+    from nfl_big_data_bowl_2024_spark.sources.readers import (
+        read_testdata_table as _t,
     )
 
     d = _t(spark, "/root/testdata/sf0.01", "documents")
@@ -246,29 +248,26 @@ def test_cluster_lsh_composition_matches_exact_audit_twin(spark):
 
 
 def test_cluster_labels_shared_across_consumers(spark):
-    """dedup_cluster_assign and dedup_cluster_representative consume ONE
-    session-scoped CC label materialization (verdict r10 item 2): the
-    second call to the shared builder must return the SAME checkpointed
-    DataFrame object (no recompute of the LSH + fixpoint), and the
-    representative query's labels must be exactly the assign output."""
+    """The four cluster-dedup consumers of the shared label builder
+    (pipeline_common.cluster_labels_lsh) agree: dedup_cluster_assign
+    returns exactly its labels, the representative query's labels are
+    exactly the assign output, and the full label map and survivorship
+    counts are consistent with it."""
     from nfl_big_data_bowl_2024_spark.plans.pipeline_common import (
-        _CC_LABELS_CACHE,
         cluster_labels_lsh,
     )
     from nfl_big_data_bowl_2024_spark.plans.pipeline_sim import (
         dedup_cluster_assign,
+        dedup_cluster_labels,
         dedup_cluster_representative,
+        dedup_survivorship_by_source,
     )
 
     sf = "/root/testdata/sf0.001"
-    # cache keys are (applicationId, sf_dir, data_fingerprint) since r12
-    # — evict by sf_dir so the first call below is a real fresh build
-    for k in [k for k in _CC_LABELS_CACHE if k[1] == sf]:
-        del _CC_LABELS_CACHE[k]
-    first = cluster_labels_lsh(spark, sf)
-    assert cluster_labels_lsh(spark, sf) is first
-    assert dedup_cluster_assign(spark, sf) is first
-    labels = {(r.doc_id, r.component) for r in first.collect()}
+    labels = {(r.doc_id, r.component) for r in cluster_labels_lsh(spark, sf).collect()}
+    assert {
+        (r.doc_id, r.component) for r in dedup_cluster_assign(spark, sf).collect()
+    } == labels
     reps = dedup_cluster_representative(spark, sf).collect()
     comp_ids = {c for _, c in labels}
     assert {r.component for r in reps} == comp_ids
@@ -276,14 +275,8 @@ def test_cluster_labels_shared_across_consumers(spark):
     assert all(
         (r.rep_doc_id, r.component) in labels for r in reps
     )
-    # the r12 consumers share the same single memo entry: the full label
-    # map restricted to edge-connected docs equals the assign output, and
-    # no second build was inserted
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_sim import (
-        dedup_cluster_labels,
-        dedup_survivorship_by_source,
-    )
-
+    # the full label map restricted to edge-connected docs equals the
+    # assign output
     full = {
         (r.doc_id, r.component)
         for r in dedup_cluster_labels(spark, sf).collect()
@@ -292,9 +285,6 @@ def test_cluster_labels_shared_across_consumers(spark):
     assert labels <= full
     surv = dedup_survivorship_by_source(spark, sf).collect()
     assert sum(r.n_kept for r in surv) == len({c for _, c in full})
-    assert sum(1 for k in _CC_LABELS_CACHE if k[1] == sf) == 1
-    for k in [k for k in _CC_LABELS_CACHE if k[1] == sf]:
-        del _CC_LABELS_CACHE[k]
 
 
 def test_semantic_dedup_drops_planted_neighbors(spark):
@@ -391,7 +381,7 @@ def test_fuzzy_blocked_levenshtein_adversarial_fixture(spark):
     import os
     import tempfile
 
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_txt import (
         txt_fuzzy_blocked_levenshtein,
     )
 
@@ -631,7 +621,7 @@ def test_sorted_neighborhood_partitioning_invariant(spark):
 def test_hard_negatives_match_numpy(spark, embeddings):
     """sim_hard_negatives top-1 == a numpy argmax over rounded cosines with
     the same (cosine desc, vec_id asc) tie order."""
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_sim import (
         sim_hard_negatives,
     )
 

@@ -417,3 +417,43 @@ def test_schema_evolution_mergeschema_null_semantics(spark):
         )[1][:120]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_yap_plan_runs_over_read_tracking(spark, tmp_path):
+    """E2 over the engine's own tracking reader: read_tracking carries the
+    ``time`` timestamp, not the kernel's ``t`` seconds, so the plan derives
+    ``t`` itself and must equal the plan over the same rows with ``t``
+    derived beforehand."""
+    from nfl_big_data_bowl_2024_spark import fixtures, schemas
+    from nfl_big_data_bowl_2024_spark.plans.domain import yap_plan
+
+    base_us = 1_700_000_000_000_000
+    tr = fixtures.tracking_df(spark).withColumn(
+        "time",
+        F.timestamp_micros(F.lit(base_us) + F.round(F.col("t") * 1e6).cast("long")),
+    )
+    tr.select(
+        *[
+            F.col(f.name).cast(f.dataType) if f.name in tr.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schemas.TRACKING.fields
+        ],
+        F.lit(1).alias("week"),
+    ).write.partitionBy("week").parquet(str(tmp_path / "tracking"))
+
+    scan = read_tracking(spark, str(tmp_path / "tracking"))
+    assert "t" not in scan.columns
+    dims = (
+        fixtures.players_df(spark),
+        fixtures.plays_df(spark),
+        fixtures.tackles_df(spark),
+    )
+    got = sorted(tuple(r) for r in yap_plan(scan, *dims).collect())
+    want = sorted(
+        tuple(r)
+        for r in yap_plan(
+            scan.withColumn("t", F.unix_micros("time") / 1e6), *dims
+        ).collect()
+    )
+    assert got == want
+    assert any(r[-1] == "ok" for r in got)

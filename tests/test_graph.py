@@ -433,3 +433,47 @@ def test_ppr_hand_replay_and_broadcast_seed_plan(spark):
     plan = step._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") >= 3
+
+
+def test_null_endpoints_match_across_cc_arms(spark, monkeypatch):
+    """A NULL src or dst joins nothing on the distributed arm: the edge
+    carries no connectivity, its other endpoint is still a node, and NULL
+    is one node labelled NULL. The driver-local union-find must give the
+    same rows."""
+    import nfl_big_data_bowl_2024_spark.operators.graph as G
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (3, 4), (None, None), (5, None)],
+        "src long, dst long",
+    )
+
+    def run():
+        key = lambda r: (r[0] is not None, r[0] or 0)  # noqa: E731
+        return sorted((tuple(r) for r in G.connected_components(edges).collect()), key=key)
+
+    local = run()
+    monkeypatch.setattr(G, "_DRIVER_CC_EDGE_ROWS", -1)
+    dist = run()
+    assert local == dist
+    assert local == [(None, None), (1, 1), (2, 1), (3, 3), (4, 3), (5, 5)]
+
+
+def test_copurchase_unknown_size_takes_scale_safe_arm(spark, monkeypatch, tmp_path):
+    """An unknown lineitem size (0: missing or non-local path) must not take
+    the small-scale broadcast self-join; it takes the collect_set arm."""
+    import io
+    from contextlib import redirect_stdout
+
+    import nfl_big_data_bowl_2024_spark.plans.pipeline_graph as pg
+
+    spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 10), (2, 11)], "l_orderkey long, l_partkey long"
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    monkeypatch.setattr(pg, "_table_tree_bytes", lambda sf_dir, name: 0)
+    df = pg.graph_copurchase_projection(spark, str(tmp_path))
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    assert "collect_set" in plan
+    assert "Join" not in plan

@@ -156,7 +156,7 @@ def test_observe_metrics_single_pass_and_consistent(spark):
     """The CollectMetrics node rides the result job: ONE scan in the plan,
     and the observed admission metrics equal independently-computed
     aggregates over the same table."""
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_dq import (
         dq_observe_metrics,
     )
     from pyspark.sql import Observation

@@ -36,8 +36,7 @@ def test_leakage_split_duplicates_share_split(spark, queries):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
     # patch the module the function LIVES in (pipeline_doc since the
-    # round-9 family split), not the pipeline_ops compat re-export —
-    # the re-exported binding would not see a shim-level patch
+    # round-9 family split)
     import nfl_big_data_bowl_2024_spark.plans.pipeline_doc as po
 
     orig = po._t

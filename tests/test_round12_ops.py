@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import math
 import os
-import shutil
 
 SF = "/root/testdata/sf0.001"
 
@@ -79,48 +78,6 @@ def test_theil_sen_odd_still_exact(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0]["n_slopes"] == 3
     assert rows[0]["sen_slope_micro"] == 400 * 1_000_000
-
-
-def test_cluster_labels_memo_fingerprint_eviction(spark, tmp_path):
-    """r11 advice (low): the CC-label memo must (a) serve the memoized
-    relation while the documents tree is unchanged, (b) stop serving
-    stale labels once the tree is regenerated in place, and (c) hold at
-    most one live entry per sf_dir."""
-    from nfl_big_data_bowl_2024_spark.plans import pipeline_common as pc
-
-    d = str(tmp_path / "sfdocs")
-    os.makedirs(d)
-    shutil.copy(
-        os.path.join(SF, "documents.parquet"),
-        os.path.join(d, "documents.parquet"),
-    )
-    pc._CC_LABELS_CACHE.clear()
-    first = pc.cluster_labels_lsh(spark, d)
-    assert pc.cluster_labels_lsh(spark, d) is first, "unchanged tree: memo hit"
-    n_first = first.count()
-
-    # regenerate in place: drop half the docs; the memo must miss
-    import duckdb
-
-    half = duckdb.connect().execute(
-        f"SELECT * FROM '{d}/documents.parquet' WHERE doc_id % 2 = 0"
-    ).df()
-    half.to_parquet(os.path.join(d, "documents.parquet"))
-    second = pc.cluster_labels_lsh(spark, d)
-    assert second is not first, "regenerated tree must invalidate the memo"
-    assert second.count() < n_first
-    assert (
-        sum(1 for k in pc._CC_LABELS_CACHE if k[1] == d) == 1
-    ), "stale fingerprints of the same sf_dir must be evicted on insert"
-
-    # dead-application eviction: a foreign app's entry disappears on insert
-    pc._CC_LABELS_CACHE[("dead-app-000", d, "0:0:0")] = second
-    pc._CC_LABELS_CACHE.pop(
-        (spark.sparkContext.applicationId, d, pc._docs_fingerprint(d))
-    )
-    pc.cluster_labels_lsh(spark, d)
-    assert not any(k[0] == "dead-app-000" for k in pc._CC_LABELS_CACHE)
-    pc._CC_LABELS_CACHE.clear()
 
 
 def test_novelty_hash_keying_collision_free(spark):

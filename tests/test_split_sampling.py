@@ -12,7 +12,7 @@ def test_stump_split_matches_numpy_exact_integers(spark):
     """Best (feature, threshold) == an exact-integer numpy recomputation of
     gain = S_L^2/n_L + S_R^2/n_R - S^2/n over python ints (no float at any
     point, matching the plan's decimal arithmetic)."""
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_ml import (
         ml_stump_split_finding,
     )
 
@@ -55,7 +55,7 @@ def test_sequential_poisson_prefers_heavy_docs(spark):
     """The weighted draw must overrepresent long documents relative to a
     uniform draw: mean n_chars of the sample > population mean (the whole
     point of PPS sampling), and the draw is a pure function of content."""
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import (
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_doc import (
         doc_sequential_poisson_sample,
     )
     from pyspark.sql import functions as F
@@ -79,7 +79,7 @@ def test_bm25_matches_python_model_and_partitioning(spark):
     partitioning-invariant (a float sum would not be)."""
     import math
 
-    from nfl_big_data_bowl_2024_spark.plans.pipeline_ops import txt_bm25_topk
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_txt import txt_bm25_topk
 
     got = [
         (r["doc_id"], r["score_1e4"], r["n_terms"])
@@ -119,3 +119,14 @@ def test_bm25_matches_python_model_and_partitioning(spark):
         key=lambda t: (-t[1], t[0]),
     )[:25]
     assert got == want
+
+
+def test_dsir_select_over_empty_documents(spark, tmp_path):
+    """An empty corpus observes its token sums as None (SQL sum over zero
+    rows); DSIR selection must build and return no rows instead of
+    raising."""
+    from nfl_big_data_bowl_2024_spark.plans.pipeline_doc import doc_dsir_select
+
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    d.limit(0).write.parquet(str(tmp_path / "documents.parquet"))
+    assert doc_dsir_select(spark, str(tmp_path)).collect() == []
