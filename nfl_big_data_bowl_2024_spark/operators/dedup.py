@@ -48,7 +48,7 @@ def _spread(df: DataFrame, id_col: str) -> DataFrame:
     return df.repartition(sc.defaultParallelism, F.col(id_col))
 
 
-def shingle_array(text_col: str, n: int = 8) -> "Column":
+def shingle_array(text_col: str, n: int = 8) -> Column:
     """Distinct character n-gram shingles as an ARRAY column (map-only, no
     explode). Short texts (< n chars) contribute their whole text as a single
     shingle."""
@@ -60,7 +60,7 @@ def shingle_array(text_col: str, n: int = 8) -> "Column":
     )
 
 
-def hashed_shingle_array(text_col: str, n: int = 8) -> "Column":
+def hashed_shingle_array(text_col: str, n: int = 8) -> Column:
     """Distinct xxhash64 values of the character n-gram shingles, as an
     ARRAY<BIGINT> column. Semantics match ``transform(shingle_array(...),
     xxhash64)`` exactly whenever xxhash64 is collision-free over the text's

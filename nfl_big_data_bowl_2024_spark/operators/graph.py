@@ -1,32 +1,40 @@
-"""Distributed connected components — cluster assignment for near-dup graphs.
+"""Graph operators: iterative fixpoints and join-based counts over edge
+relations, run as driver-side loops of DataFrame joins (Spark has no
+recursive CTE).
 
-Dedup pipelines need more than PAIRS of near-duplicates: keeping "one doc per
-duplicate cluster" requires the transitive closure of the pair relation, i.e.
-connected components over the similarity graph. This is inherently iterative
-(Spark has no recursive CTE), so it runs as a driver-side loop of DataFrame
-joins — the standard label-propagation formulation (each node repeatedly takes
-the min label in its closed neighborhood), the same shape GraphX's
-``connectedComponents`` Pregel program computes.
+Operators, by fixpoint shape:
+  - ``connected_components``: min-label flooding with a delta frontier and
+    pointer doubling, or a driver-local union-find (``_cc_union_find_local``)
+    for edge sets up to ``_DRIVER_CC_EDGE_ROWS``.
+  - ``pagerank_integer``, ``pagerank_personalized_integer`` and
+    ``hits_integer``: float-free numeric power iterations in integer
+    micro-units.
+  - ``label_propagation_mode``: deterministic synchronous mode LPA.
+  - ``kcore_peel``: fixed-round monotone peeling.
+  - ``bfs_min_hops``: the frontier/reachability fixpoint.
+  - ``bellman_ford_bounded`` and ``temporal_reachability``: one bounded
+    delta-relaxation loop (``_delta_relax``) with two relax rules.
+  - ``triangle_counts``: single-pass degree-oriented wedge enumeration.
 
-Scale notes:
-  - The symmetrized edge relation is persisted PRE-PARTITIONED by src, so
-    each round's message join exchanges only the label side; messages come
-    only from the DELTA FRONTIER (nodes whose label changed last round —
-    sound because min-label flooding is monotone), and the per-round min
-    agg + labels self-join (pointer doubling: lbl <- label(lbl)) halve
-    label distance — O(log diameter) rounds, the hash-to-min shape of
-    Kiveris et al., "Connected Components in MapReduce and Beyond".
-    Near-dup graphs are short chains; typical corpora converge in <= 4
-    rounds, with the edge join touching a shrinking frontier after round 1.
-  - ``localCheckpoint`` truncates the lineage each round — without it the
-    plan doubles per iteration and Catalyst analysis time explodes.
-  - Convergence = empty frontier (an isEmpty probe on the checkpointed
-    delta) — no row data to the driver.
+Every operator is integer arithmetic and set algebra with its round count
+part of its semantics, so a DuckDB oracle replays it bit-exactly.
+
+Shared disciplines:
+  - Bulk edge relations persist via ``_edges_on_disk`` (DISK_ONLY at
+    unknown or large sizes, so cached edges never squeeze execution
+    memory), and exchanges whose per-task state scales with the edge count
+    take their width from ``_exchange_width``.
+  - ``localCheckpoint`` truncates the growing per-round state — without it
+    the plan doubles per iteration and Catalyst analysis time explodes. It
+    also drops lineage, so losing an executor mid-query is unrecoverable.
+  - Convergence probes ride the checkpoint job as observed counts
+    (``checkpoint_counted``) instead of a separate job.
+  - Node sets up to ``_BROADCAST_NODE_SET_ROWS`` rows broadcast.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
@@ -185,7 +193,25 @@ def connected_components(
 ) -> DataFrame:
     """Component label per node: (node, component) where component is the
     minimum node id reachable through ``edges`` (undirected; self-pairs and
-    duplicates tolerated). Nodes are those appearing in any edge."""
+    duplicates tolerated). Nodes are those appearing in any edge.
+
+    Dedup pipelines need this beyond near-duplicate PAIRS: keeping "one doc
+    per duplicate cluster" requires the transitive closure of the pair
+    relation. The distributed arm is the label-propagation formulation
+    GraphX's ``connectedComponents`` Pregel program computes (each node
+    repeatedly takes the min label in its closed neighborhood):
+      - The symmetrized edge relation is persisted PRE-PARTITIONED by src,
+        so each round's message join exchanges only the label side;
+        messages come only from the DELTA FRONTIER (nodes whose label
+        changed last round — sound because min-label flooding is
+        monotone), and the per-round min agg + labels self-join (pointer
+        doubling: lbl <- label(lbl)) halve label distance — O(log
+        diameter) rounds, the hash-to-min shape of Kiveris et al.,
+        "Connected Components in MapReduce and Beyond". Near-dup graphs
+        are short chains; typical corpora converge in <= 4 rounds.
+      - Convergence = no label changed, counted on the round's own
+        checkpoint job — no row data to the driver.
+    """
     # Materialize the caller's edge relation ONCE before anything else:
     # the symmetrizing union below references it twice, and Spark executes
     # both union branches — for an LSH-derived edge source that meant the
@@ -767,6 +793,62 @@ def label_propagation_mode(
     return lab.select("node", F.col("lab").alias("community"))
 
 
+def _delta_relax(
+    edges: DataFrame,
+    seeds: DataFrame,
+    rounds: int,
+    value: str,
+    cand: Column,
+    usable: Column | None = None,
+) -> DataFrame:
+    """The bounded delta-relaxation loop shared by bellman_ford_bounded and
+    temporal_reachability: (node, ``value``) = the minimum over paths of at
+    most ``rounds`` edges from the seed set, seeds at 0.
+
+    ``edges`` is the (src, dst, ...) relation, persisted DISK_ONLY for the
+    loop (_edges_on_disk memory discipline). Each round joins the frontier
+    (nodes whose ``value`` improved last round) with the edges on src,
+    keeps the ``usable`` hops, takes the minimum ``cand`` per dst and keeps
+    the strict improvements. The relax rule must be monotone (a smaller
+    value at u never removes a candidate at its successors), so after k
+    rounds every value is exact over <= k-edge paths. Per round: one keyed
+    frontier-x-edges shuffle join + a min aggregate + a left join against
+    the current values. Values change in place (unlike BFS's append-only
+    layers), so the state relation is re-aggregated and lineage-truncated
+    per round — two bounded materializations per round, acceptable at a
+    contract-bounded depth.
+    """
+    e, _ = _edges_on_disk(edges)
+    state = seeds.select(
+        F.col("node").cast("long").alias("node"),
+        F.lit(0).cast("long").alias(value),
+    ).localCheckpoint(eager=True)
+    frontier = state
+    for _k in range(rounds):
+        hop = frontier.withColumnRenamed("node", "src").join(e, "src")
+        if usable is not None:
+            hop = hop.filter(usable)
+        best = hop.groupBy(F.col("dst").alias("node")).agg(F.min(cand).alias("cand"))
+        # convergence probe observed on the checkpoint job (r14) — no
+        # separate isEmpty pass
+        improved, n_improved = checkpoint_counted(
+            best.join(state, "node", "left")
+            .filter(F.col(value).isNull() | (F.col("cand") < F.col(value)))
+            .select("node", F.col("cand").alias(value))
+        )
+        if n_improved == 0:
+            break
+        state = (
+            state.unionByName(improved)
+            .groupBy("node")
+            .agg(F.min(value).alias(value))
+            .localCheckpoint(eager=True)
+        )
+        frontier = improved
+    e.unpersist()
+    return state
+
+
 def bellman_ford_bounded(
     edges: DataFrame,
     seeds: DataFrame,
@@ -779,62 +861,20 @@ def bellman_ford_bounded(
     (node, cost) = the minimum total edge weight over any path of at most
     ``rounds`` edges from the seed set (integer weights).
 
-    Synchronous Bellman-Ford with delta propagation — the weighted sibling
-    of ``bfs_min_hops``: each round relaxes ONLY the nodes whose distance
-    improved last round (after k rounds dist(v) is exact over <= k-edge
-    paths: a j-edge path improves its endpoint no later than round j), so
-    the join is driven by the improving wavefront, never the full node
-    set. Per round: one keyed frontier-x-edges shuffle join + a min
-    aggregate + a left join against the current distances to keep strict
-    improvements. Distances change in place (unlike BFS's append-only
-    layers), so the dist relation is re-aggregated and lineage-truncated
-    per round — two bounded materializations per round, acceptable at a
-    contract-bounded depth. Edge relation persists DISK_ONLY
-    (_edges_on_disk memory discipline). Integer set/min algebra
+    Synchronous Bellman-Ford with delta propagation (``_delta_relax``) —
+    the weighted sibling of ``bfs_min_hops``: each round relaxes ONLY the
+    nodes whose distance improved last round (a j-edge path improves its
+    endpoint no later than round j), so the join is driven by the
+    improving wavefront, never the full node set. Integer set/min algebra
     throughout: a DuckDB recursive CTE replays the same fixpoint
     bit-for-bit, so the registered query is hash-checkable.
     """
-    e, _ = _edges_on_disk(
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(w).cast("long").alias("w"),
-        )
+    e = edges.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        F.col(w).cast("long").alias("w"),
     )
-    dist = seeds.select(
-        F.col("node").cast("long").alias("node"),
-        F.lit(0).cast("long").alias("cost"),
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for _k in range(rounds):
-        cand = (
-            frontier.withColumnRenamed("node", "src")
-            .join(e, "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("cost") + F.col("w")).alias("cand_cost"),
-            )
-            .groupBy("node")
-            .agg(F.min("cand_cost").alias("cand_cost"))
-        )
-        # convergence probe observed on the checkpoint job (r14) — no
-        # separate isEmpty pass
-        improved, n_improved = checkpoint_counted(
-            cand.join(dist, "node", "left")
-            .filter(F.col("cost").isNull() | (F.col("cand_cost") < F.col("cost")))
-            .select("node", F.col("cand_cost").alias("cost"))
-        )
-        if n_improved == 0:
-            break
-        dist = (
-            dist.unionByName(improved)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    e.unpersist()
-    return dist
+    return _delta_relax(e, seeds, rounds, "cost", F.col("cost") + F.col("w"))
 
 
 def temporal_reachability(
@@ -850,55 +890,21 @@ def temporal_reachability(
     arrival time over paths whose edge timestamps never decrease — an
     edge (u, v, t) is usable only if t >= arrival(u). Seeds arrive at 0.
 
-    The min-plus scaffolding of ``bellman_ford_bounded`` with the relax
-    rule swapped: cand_arrival(v) = min over usable edges of t. The
-    semiring is still monotone (an EARLIER arrival at u enables a
-    SUPERSET of outgoing edges), so delta propagation — only nodes whose
-    arrival improved drive the next round — remains exact for <= rounds
-    edges. Integer timestamps throughout; a DuckDB recursive CTE replays
-    the fixpoint bit-for-bit.
+    ``bellman_ford_bounded``'s delta-relaxation loop with the relax rule
+    swapped: cand_arrival(v) = min over usable edges of t. The rule is
+    still monotone (an EARLIER arrival at u enables a SUPERSET of outgoing
+    edges), so delta propagation — only nodes whose arrival improved drive
+    the next round — remains exact for <= rounds edges. Integer timestamps
+    throughout; a DuckDB recursive CTE replays the fixpoint bit-for-bit.
     """
-    e, _ = _edges_on_disk(
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(t).cast("long").alias("t"),
-        )
+    e = edges.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        F.col(t).cast("long").alias("t"),
     )
-    arr = seeds.select(
-        F.col("node").cast("long").alias("node"),
-        F.lit(0).cast("long").alias("arrival"),
-    ).localCheckpoint(eager=True)
-    frontier = arr
-    for _k in range(rounds):
-        cand = (
-            frontier.withColumnRenamed("node", "src")
-            .join(e, "src")
-            .filter(F.col("t") >= F.col("arrival"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("t").alias("cand_arr"))
-        )
-        # convergence probe observed on the checkpoint job (r14) — no
-        # separate isEmpty pass
-        improved, n_improved = checkpoint_counted(
-            cand.join(arr, "node", "left")
-            .filter(
-                F.col("arrival").isNull()
-                | (F.col("cand_arr") < F.col("arrival"))
-            )
-            .select("node", F.col("cand_arr").alias("arrival"))
-        )
-        if n_improved == 0:
-            break
-        arr = (
-            arr.unionByName(improved)
-            .groupBy("node")
-            .agg(F.min("arrival").alias("arrival"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    e.unpersist()
-    return arr
+    return _delta_relax(
+        e, seeds, rounds, "arrival", F.col("t"), usable=F.col("t") >= F.col("arrival")
+    )
 
 
 def _ppr_step(

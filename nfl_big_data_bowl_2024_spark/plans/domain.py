@@ -21,7 +21,7 @@ kernel cost is embarrassingly parallel across plays.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fixtures, schemas
@@ -32,7 +32,6 @@ from ..kernels.yap import (
     max_params_play_kernel,
     yap_play_kernel,
 )
-from ..operators.windows import event_window, first_crossing
 from .registry import register
 
 _PLAY_KEY = ["gameId", "playId"]
@@ -340,31 +339,17 @@ def e2_yap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Driver-checkable operating point for the U1 kernel: the two straight-line
-# pursuit plays (101 right, 201 left mirror). For them everything except two
-# LQR-path maxima is SQL-derivable from the fixture CTE:
-#   - the start frame f0 (first handoff-class event) and the vicinity
-#     crossing fv (first frame after f0 with dist < R_t) are plain SQL;
-#   - the first LQR-FEASIBLE intercept frame is f0 + 6 — pinned, and proven
-#     robust, by tests/test_yap_kernel.py::test_closed_form_operating_point
-#     (the previous candidate fails r_f > R_t by >= 4%, the winner passes
-#     all three constraints with >= 48% headroom, so no ~1-ulp numeric
-#     drift can move the argmin);
-#   - YAP is then pure carrier displacement: +/- (x_c[fv] - x_c[f0+6]);
-#   - max_vel_opt / max_accel_opt are maxima OVER the optimal path itself
-#     (not SQL-expressible); they enter the oracle as literals whose
-#     unrounded values sit >= 0.0018 away from their 2 dp rounding
-#     boundary (asserted by the same test).
-_YAP_CF_ORACLE = f"""
-WITH tracking AS (SELECT * FROM {fixtures.tracking_values_cte().replace('fx(', 'fxy(')}),
+def _yap_cf_oracle(alias: str, meta_rows: str, intercept: int) -> str:
+    """Oracle of a closed-form YAP operating point over the fixture CTE
+    (renamed ``alias``): ``meta_rows`` are the VALUES rows (gameId, playId,
+    carrierId, tacklerId, name, position, dir, max_vel_opt,
+    max_accel_opt), and the pinned intercept frame is f0 + ``intercept``."""
+    cte = fixtures.tracking_values_cte().replace("fx(", f"{alias}(")
+    return f"""
+WITH tracking AS (SELECT * FROM {cte}),
 meta AS (
     SELECT * FROM (VALUES
-        (CAST(1 AS BIGINT), CAST(101 AS BIGINT), CAST(1001 AS BIGINT),
-         CAST(2001 AS BIGINT), 'Tackler Alpha', 'CB', 'right',
-         CAST(5.66 AS DOUBLE), CAST(0.57 AS DOUBLE)),
-        (CAST(2 AS BIGINT), CAST(201 AS BIGINT), CAST(1002 AS BIGINT),
-         CAST(2003 AS BIGINT), 'Tackler Charlie', 'MLB', 'left',
-         CAST(5.6 AS DOUBLE), CAST(0.34 AS DOUBLE))
+        {meta_rows}
     ) AS m(gameId, playId, carrierId, tacklerId, name, position, dir,
            max_vel_opt, max_accel_opt)
 ),
@@ -405,8 +390,35 @@ JOIN crossing cr ON cr.gameId = m.gameId AND cr.playId = m.playId
 JOIN dist cv ON cv.gameId = m.gameId AND cv.playId = m.playId
             AND cv.frameId = cr.fv
 JOIN dist cj ON cj.gameId = m.gameId AND cj.playId = m.playId
-            AND cj.frameId = s.f0 + 6
+            AND cj.frameId = s.f0 + {intercept}
 """
+
+
+# Driver-checkable operating point for the U1 kernel: the two straight-line
+# pursuit plays (101 right, 201 left mirror). For them everything except two
+# LQR-path maxima is SQL-derivable from the fixture CTE:
+#   - the start frame f0 (first handoff-class event) and the vicinity
+#     crossing fv (first frame after f0 with dist < R_t) are plain SQL;
+#   - the first LQR-FEASIBLE intercept frame is f0 + 6 — pinned, and proven
+#     robust, by tests/test_yap_kernel.py::test_closed_form_operating_point
+#     (the previous candidate fails r_f > R_t by >= 4%, the winner passes
+#     all three constraints with >= 48% headroom, so no ~1-ulp numeric
+#     drift can move the argmin);
+#   - YAP is then pure carrier displacement: +/- (x_c[fv] - x_c[f0+6]);
+#   - max_vel_opt / max_accel_opt are maxima OVER the optimal path itself
+#     (not SQL-expressible); they enter the oracle as literals whose
+#     unrounded values sit >= 0.0018 away from their 2 dp rounding
+#     boundary (asserted by the same test).
+_YAP_CF_ORACLE = _yap_cf_oracle(
+    "fxy",
+    """(CAST(1 AS BIGINT), CAST(101 AS BIGINT), CAST(1001 AS BIGINT),
+         CAST(2001 AS BIGINT), 'Tackler Alpha', 'CB', 'right',
+         CAST(5.66 AS DOUBLE), CAST(0.57 AS DOUBLE)),
+        (CAST(2 AS BIGINT), CAST(201 AS BIGINT), CAST(1002 AS BIGINT),
+         CAST(2003 AS BIGINT), 'Tackler Charlie', 'MLB', 'left',
+         CAST(5.6 AS DOUBLE), CAST(0.34 AS DOUBLE))""",
+    6,
+)
 
 
 @register(
@@ -442,55 +454,13 @@ def e2_yap_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
 # earlier candidate fails its binding constraint by >= 30%, the winner
 # passes all three with >= 28% headroom, and both maxima sit >= 0.0020 from
 # their 2 dp half-up boundary.
-_YAP_CF_CURVED_ORACLE = f"""
-WITH tracking AS (SELECT * FROM {fixtures.tracking_values_cte().replace('fx(', 'fxcv(')}),
-meta AS (
-    SELECT * FROM (VALUES
-        (CAST(4 AS BIGINT), CAST(301 AS BIGINT), CAST(1001 AS BIGINT),
+_YAP_CF_CURVED_ORACLE = _yap_cf_oracle(
+    "fxcv",
+    """(CAST(4 AS BIGINT), CAST(301 AS BIGINT), CAST(1001 AS BIGINT),
          CAST(2007 AS BIGINT), 'Tackler Golf', 'SS', 'right',
-         CAST(5.62 AS DOUBLE), CAST(5.9 AS DOUBLE))
-    ) AS m(gameId, playId, carrierId, tacklerId, name, position, dir,
-           max_vel_opt, max_accel_opt)
-),
-carrier AS (
-    SELECT t.gameId, t.playId, t.frameId, t.event, t.x, t.y
-    FROM tracking t JOIN meta m
-      ON t.gameId = m.gameId AND t.playId = m.playId AND t.nflId = m.carrierId
-),
-start_f AS (
-    SELECT gameId, playId,
-           min(CASE WHEN event IN ('handoff','pass_outcome_caught','run',
-                                   'snap_direct') THEN frameId END) AS f0
-    FROM carrier GROUP BY gameId, playId
-),
-dist AS (
-    SELECT c.gameId, c.playId, c.frameId, c.x AS cx,
-           sqrt((c.x - k.x) * (c.x - k.x) + (c.y - k.y) * (c.y - k.y)) AS d
-    FROM carrier c
-    JOIN meta m ON c.gameId = m.gameId AND c.playId = m.playId
-    JOIN tracking k ON k.gameId = c.gameId AND k.playId = c.playId
-                   AND k.frameId = c.frameId AND k.nflId = m.tacklerId
-),
-crossing AS (
-    SELECT d.gameId, d.playId, min(d.frameId) AS fv
-    FROM dist d JOIN start_f s ON d.gameId = s.gameId AND d.playId = s.playId
-    WHERE d.d < 1.0 AND d.frameId > s.f0
-    GROUP BY d.gameId, d.playId
+         CAST(5.62 AS DOUBLE), CAST(5.9 AS DOUBLE))""",
+    5,
 )
-SELECT m.gameId AS game_ID, m.playId AS play_ID, m.tacklerId AS NFL_ID,
-       m.name AS name, m.position AS position,
-       floor((CASE WHEN m.dir = 'left' THEN cj.cx - cv.cx
-                   ELSE cv.cx - cj.cx END) * 100 + 0.5) / 100 AS YAP,
-       m.max_vel_opt AS max_vel_opt, m.max_accel_opt AS max_accel_opt,
-       'ok' AS status
-FROM meta m
-JOIN start_f s ON s.gameId = m.gameId AND s.playId = m.playId
-JOIN crossing cr ON cr.gameId = m.gameId AND cr.playId = m.playId
-JOIN dist cv ON cv.gameId = m.gameId AND cv.playId = m.playId
-            AND cv.frameId = cr.fv
-JOIN dist cj ON cj.gameId = m.gameId AND cj.playId = m.playId
-            AND cj.frameId = s.f0 + 5
-"""
 
 
 @register(
@@ -588,21 +558,35 @@ def single_play_animation_input(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Fixture event time of every stream_* query and its oracle, in INTEGER
+# microseconds on both engines: play p starts at epoch second
+# 1_700_000_000 + 100 p, and t has exact 0.1 s granularity, so round(t*10)
+# is integral — no double->timestamp rounding hazard.
+_EVENT_US_SQL = (
+    "(CAST(1700000000 AS BIGINT) + playId * 100) * 1000000"
+    " + CAST(round(t * 10) AS BIGINT) * 100000"
+)
+
+
+def _event_us() -> Column:
+    """``_EVENT_US_SQL`` as a Spark column over the fixture tracking rows."""
+    return (
+        (F.lit(1_700_000_000).cast("long") + F.col("playId") * 100) * 1_000_000
+        + F.round(F.col("t") * 10).cast("long") * 100_000
+    )
+
+
 # Deterministic oracle for the STREAMING sessionization: gap-based sessions
 # (the general lag/running-sum formulation of session_window) over the same
 # fixture, INCLUDING the watermark emission rule — append mode only emits a
 # session once the watermark (max event time - 10 s) has passed its end, so
 # the chronologically-last play's session is provably withheld and the
-# oracle reproduces that by filtering on the same cutoff. Event times are
-# derived in INTEGER microseconds on both engines (t has exact 0.1 s
-# granularity, so round(t*10) is integral) — no double->timestamp rounding
-# hazard.
+# oracle reproduces that by filtering on the same cutoff.
 _STREAM_SESS_ORACLE = f"""
 WITH fx AS (SELECT * FROM {fixtures.tracking_values_cte()}),
 ev AS (
     SELECT gameId, playId, frameId, s,
-           (CAST(1700000000 AS BIGINT) + playId * 100) * 1000000
-           + CAST(round(t * 10) AS BIGINT) * 100000 AS ts_us
+           {_EVENT_US_SQL} AS ts_us
     FROM fx
 ),
 flagged AS (
@@ -661,12 +645,8 @@ def stream_dedup_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="stream_d_")
     try:
-        micros = (
-            (F.lit(1_700_000_000).cast("long") + F.col("playId") * 100) * 1_000_000
-            + F.round(F.col("t") * 10).cast("long") * 100_000
-        )
         tr = fixtures.tracking_df(spark).withColumn(
-            "event_time", F.timestamp_micros(micros)
+            "event_time", F.timestamp_micros(_event_us())
         )
         tr.coalesce(1).write.mode("overwrite").parquet(d)
         # Redelivery: the play with the GLOBAL max event time — its frames
@@ -697,8 +677,7 @@ _STREAM_WIN_ORACLE = f"""
 WITH fxw AS (SELECT * FROM {fixtures.tracking_values_cte().replace('fx(', 'fxw(')}),
 ev AS (
     SELECT gameId, playId, s, a,
-           (CAST(1700000000 AS BIGINT) + playId * 100) * 1000000
-           + CAST(round(t * 10) AS BIGINT) * 100000 AS ts_us
+           {_EVENT_US_SQL} AS ts_us
     FROM fxw
 ),
 win AS (
@@ -733,12 +712,8 @@ def stream_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="stream_w_")
     try:
-        micros = (
-            (F.lit(1_700_000_000).cast("long") + F.col("playId") * 100) * 1_000_000
-            + F.round(F.col("t") * 10).cast("long") * 100_000
-        )
         tr = fixtures.tracking_df(spark).withColumn(
-            "event_time", F.timestamp_micros(micros)
+            "event_time", F.timestamp_micros(_event_us())
         )
         tr.coalesce(2).write.mode("overwrite").parquet(d)
         schema = spark.read.parquet(d).schema
@@ -786,13 +761,8 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="stream_q_")
     try:
-        # Integer-microsecond event times (see oracle note above).
-        micros = (
-            (F.lit(1_700_000_000).cast("long") + F.col("playId") * 100) * 1_000_000
-            + F.round(F.col("t") * 10).cast("long") * 100_000
-        )
         tr = fixtures.tracking_df(spark).withColumn(
-            "event_time", F.timestamp_micros(micros)
+            "event_time", F.timestamp_micros(_event_us())
         )
         tr.coalesce(2).write.mode("overwrite").parquet(d)
         schema = spark.read.parquet(d).schema
@@ -825,8 +795,7 @@ WITH fxe AS (SELECT * FROM {fixtures.tracking_values_cte().replace('fx(', 'fxe('
 fxp AS (SELECT * FROM {fixtures.players_values_cte().replace('fx(', 'fxp(')}),
 ev AS (
     SELECT fxe.nflId, s,
-           (CAST(1700000000 AS BIGINT) + playId * 100) * 1000000
-           + CAST(round(t * 10) AS BIGINT) * 100000 AS ts_us
+           {_EVENT_US_SQL} AS ts_us
     FROM fxe
 ),
 j AS (
@@ -866,12 +835,8 @@ def stream_enrich_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="stream_e_")
     try:
-        micros = (
-            (F.lit(1_700_000_000).cast("long") + F.col("playId") * 100) * 1_000_000
-            + F.round(F.col("t") * 10).cast("long") * 100_000
-        )
         tr = fixtures.tracking_df(spark).withColumn(
-            "event_time", F.timestamp_micros(micros)
+            "event_time", F.timestamp_micros(_event_us())
         )
         tr.coalesce(2).write.mode("overwrite").parquet(d)
         schema = spark.read.parquet(d).schema
@@ -905,14 +870,12 @@ _STREAM_SSJOIN_ORACLE = f"""
 WITHfxs AS (SELECT * FROM {fixtures.tracking_values_cte().replace('fx(', 'fxs(')}),
 fr AS (
     SELECT gameId, playId, nflId, frameId,
-           (CAST(1700000000 AS BIGINT) + playId * 100) * 1000000
-           + CAST(round(t * 10) AS BIGINT) * 100000 AS ts_us
+           {_EVENT_US_SQL} AS ts_us
     FROM fxs
 ),
 ev AS (
     SELECT gameId, playId, event,
-           (CAST(1700000000 AS BIGINT) + playId * 100) * 1000000
-           + CAST(round(t * 10) AS BIGINT) * 100000 AS evt_us
+           {_EVENT_US_SQL} AS evt_us
     FROM fxs WHERE event IS NOT NULL
 )
 SELECT f.gameId, f.playId, f.nflId, e.event, e.evt_us,
@@ -952,12 +915,8 @@ def stream_interval_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fd = tempfile.mkdtemp(prefix="stream_f_")
     ed = tempfile.mkdtemp(prefix="stream_ev_")
     try:
-        micros = (
-            (F.lit(1_700_000_000).cast("long") + F.col("playId") * 100) * 1_000_000
-            + F.round(F.col("t") * 10).cast("long") * 100_000
-        )
         tr = fixtures.tracking_df(spark).withColumn(
-            "event_time", F.timestamp_micros(micros)
+            "event_time", F.timestamp_micros(_event_us())
         )
         tr.coalesce(1).write.mode("overwrite").parquet(fd)
         tr.filter(F.col("event").isNotNull()).select(
@@ -1146,8 +1105,7 @@ _STREAM_SLIDE_ORACLE = f"""
 WITH fxsl AS (SELECT * FROM {fixtures.tracking_values_cte().replace('fx(', 'fxsl(')}),
 ev AS (
     SELECT gameId, playId, s, a,
-           (CAST(1700000000 AS BIGINT) + playId * 100) * 1000000
-           + CAST(round(t * 10) AS BIGINT) * 100000 AS ts_us
+           {_EVENT_US_SQL} AS ts_us
     FROM fxsl
 ),
 w AS (
@@ -1189,12 +1147,8 @@ def stream_sliding_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="stream_sl_")
     try:
-        micros = (
-            (F.lit(1_700_000_000).cast("long") + F.col("playId") * 100) * 1_000_000
-            + F.round(F.col("t") * 10).cast("long") * 100_000
-        )
         tr = fixtures.tracking_df(spark).withColumn(
-            "event_time", F.timestamp_micros(micros)
+            "event_time", F.timestamp_micros(_event_us())
         )
         tr.coalesce(2).write.mode("overwrite").parquet(d)
         schema = spark.read.parquet(d).schema

@@ -9,24 +9,12 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-from ..operators.dedup import (
-    minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    prefix_filter_jaccard_pairs,
-    simhash_signatures,
-)
-from ..operators.similarity import brute_force_topk, cosine_col
-from ..operators.prefix import banded_running_sum
-from ..sources.readers import read_testdata_table as _t
-from .registry import register
-
 
 # PII_PATTERNS is the single source of truth shared by the Spark side and
 # the interpolated oracle SQL (functions/text.py)
 from ..functions.text import PII_PATTERNS as _PII_PATTERNS
-
+from ..operators.dedup import minhash_lsh_candidates, ngram_jaccard_pairs
+from ..sources.readers import read_testdata_table as _t
 
 
 def _content_fingerprint():
@@ -460,56 +448,6 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_iter_sql(prev: str, out: str) -> str:
-    """One unrolled integer-PageRank iteration (see operators/graph.py:
-    pagerank_integer — div of positive ints matches Spark's div exactly)."""
-    return f"""{out} AS (
-        SELECT e.dst AS node,
-               b.b + (85 * sum(p.r // e.outdeg)) // 100 AS r
-        FROM ed e JOIN {prev} p ON e.src = p.node CROSS JOIN base b
-        GROUP BY e.dst, b.b
-    )"""
-
-
-def _kcore_round_sql(e_in: str, e_out: str, k: int) -> str:
-    """One unrolled peel round (see operators/graph.py:kcore_peel)."""
-    return f"""d_{e_out} AS (
-        SELECT src, count(*) AS n FROM {e_in} GROUP BY src
-    ),
-    k_{e_out} AS (SELECT src FROM d_{e_out} WHERE n >= {k}),
-    {e_out} AS (
-        SELECT {e_in}.src, {e_in}.dst FROM {e_in}
-        JOIN k_{e_out} a ON {e_in}.src = a.src
-        JOIN k_{e_out} b ON {e_in}.dst = b.src
-    )"""
-
-
-# ---------------------------------------------------------------------------
-# Round-7 additions: LPA community detection, fixed-point one-way ANOVA,
-# CUSUM changepoint detection.
-# ---------------------------------------------------------------------------
-
-
-def _lpa_iter_sql(prev: str, cnt: str, out: str) -> str:
-    """One unrolled synchronous mode-LPA round (see operators/graph.py:
-    label_propagation_mode — argmax by (count desc, label asc))."""
-    return f"""{cnt} AS (
-        SELECT e.dst AS node, l.lab, count(*) AS cnt
-        FROM edges e JOIN {prev} l ON e.src = l.node
-        GROUP BY e.dst, l.lab
-    ),
-    {out} AS (
-        SELECT n.node, coalesce(w.lab, n.node) AS lab
-        FROM nodes n LEFT JOIN (
-            SELECT node, lab FROM (
-                SELECT node, lab, row_number() OVER (
-                    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rn
-                FROM {cnt}) t
-            WHERE rn = 1
-        ) w ON n.node = w.node
-    )"""
-
-
 # Benford first-digit expected probabilities log10(1+1/d) in micro-units
 # (fixed literals on BOTH engines — no float log at query time).
 _BENFORD_MICRO = {
@@ -522,26 +460,11 @@ _BENFORD_MICRO = {
 # 64-entry fixed-point table so no float arithmetic reaches either engine:
 # position d (1-based) = round(1e6 / log2(d)). Wedge apexes always have
 # degree >= 2 (a wedge needs two distinct neighbors), so position 1 is an
-# unused 0; the adjacency filter caps degree at 64.
+# unused 0; the adjacency filter caps degree at 64. Also the NDCG discount
+# table of pipeline_ml.
 _AA_LOG2_MICRO: list[int] = [0] + [
     round(1_000_000 / math.log2(d)) for d in range(2, 65)
 ]
-_AA_LOG2_MICRO_SQL = ", ".join(str(w) for w in _AA_LOG2_MICRO)
-
-
-def _ppr_iter_sql(prev: str, out: str) -> str:
-    """One unrolled personalized-PageRank iteration: sparse contribution
-    join + FULL join against the seed restart vector (seeds regain their
-    restart mass even with zero in-contributions; reached non-seeds get
-    damped mass only)."""
-    return f"""{out} AS (
-        SELECT coalesce(c.node, sb.node) AS node,
-               coalesce(sb.b, 0) + (85 * coalesce(c.s, 0)) // 100 AS r
-        FROM (SELECT e.dst AS node, sum(p.r // e.outdeg) AS s
-              FROM ed e JOIN {prev} p ON e.src = p.node
-              GROUP BY e.dst) c
-        FULL JOIN seed_base sb ON c.node = sb.node
-    )"""
 
 
 # ---------------------------------------------------------------------------

@@ -1,41 +1,21 @@
 """Graph and spatial queries (graph_*, spatial_*): PageRank/HITS, label propagation, k-core, reachability, proximity pairs.
 
-Split along the registry's family seams in round 9 (shared
-helpers/oracle fragments live in pipeline_common.py). Original
-docstrings, oracle SQL and reference citations moved verbatim.
+Eleven queries run over the customer<->supplier trading graph (distinct
+(customer, supplier) pairs of orders x lineitem). Each side is built from
+one fragment per piece: ``_trading_pairs``/``_sym_edges``/``_entity`` on
+Spark, ``_pairs_sql``/``_edges_sql``/``_entity_sql`` in the DuckDB
+oracles, whose unrolled per-round CTE builders live here as well.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.dedup import (
-    minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    prefix_filter_jaccard_pairs,
-    simhash_signatures,
-)
-from ..operators.similarity import brute_force_topk, cosine_col
-from ..operators.prefix import banded_running_sum
 from ..sources.readers import read_testdata_table as _t
+from .pipeline_common import _AA_LOG2_MICRO
 from .registry import register
-
-
-# PII_PATTERNS is the single source of truth shared by the Spark side and
-# the interpolated oracle SQL (functions/text.py)
-from ..functions.text import PII_PATTERNS as _PII_PATTERNS
-
-from .pipeline_common import (  # noqa: F401
-    _AA_LOG2_MICRO_SQL,
-    _kcore_round_sql,
-    _lpa_iter_sql,
-    _pagerank_iter_sql,
-    _ppr_iter_sql,
-)
 
 
 def _table_tree_bytes(sf_dir: str, name: str) -> int:
@@ -55,7 +35,28 @@ def _table_tree_bytes(sf_dir: str, name: str) -> int:
     return total
 
 
-def _sym_edges(pairs: DataFrame, extras: "dict[str, object] | None" = None) -> DataFrame:
+# ---------------------------------------------------------------------------
+# The trading graph, Spark side: customers are the even node ids 2c,
+# suppliers the odd ids 2s + 1.
+# ---------------------------------------------------------------------------
+
+
+def _trading_pairs(spark: SparkSession, sf_dir: str, *extra_cols: Column) -> DataFrame:
+    """Distinct trading pairs ``(c, s, *extra_cols)`` of orders x lineitem,
+    the input of every trading-graph query. ``extra_cols`` are aliased
+    Columns over the orders/lineitem join, carried into the distinct."""
+    o = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+        .select(
+            F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"), *extra_cols
+        )
+        .distinct()
+    )
+
+
+def _sym_edges(pairs: DataFrame, extras: dict[str, Column] | None = None) -> DataFrame:
     """Symmetrized trading-graph edges in ONE pass over ``pairs`` (r13
     optimization): the old ``select(fwd).unionAll(select(rev))`` shape
     references the pairs subtree twice, and Catalyst does not CSE
@@ -77,19 +78,136 @@ def _sym_edges(pairs: DataFrame, extras: "dict[str, object] | None" = None) -> D
     return out.select("e.src", "e.dst", *extras.keys())
 
 
+def _supplier_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reachability queries' seed cohort: every tenth supplier's node."""
+    return (
+        _t(spark, sf_dir, "supplier")
+        .filter(F.col("s_suppkey") % 10 == 0)
+        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
+    )
+
+
+def _entity(col: str) -> list[Column]:
+    """Decode node id ``col`` into ``(is_supplier, entity_id)``."""
+    return [
+        (F.col(col) % 2).cast("int").alias("is_supplier"),
+        F.expr(f"{col} div 2").cast("long").alias("entity_id"),
+    ]
+
+
+# ---------------------------------------------------------------------------
+# The trading graph, oracle side: the SQL twins of the fragments above and
+# the unrolled per-round CTE builders of the fixpoint oracles.
+# ---------------------------------------------------------------------------
+
+
+def _pairs_sql(*extra: str, recursive: bool = False, materialized: bool = False) -> str:
+    """The opening ``WITH`` of a trading-graph oracle: ``pairs (c, s,
+    *extra)``, the twin of ``_trading_pairs``. ``extra`` are SELECT items
+    over ``o``/``l``; ``recursive`` opens ``WITH RECURSIVE``, and
+    ``materialized`` makes DuckDB compute the CTE once for all readers."""
+    cols = "".join(f", {x}" for x in extra)
+    rec = "RECURSIVE " if recursive else ""
+    mat = "MATERIALIZED " if materialized else ""
+    return f"""WITH {rec}pairs AS {mat}(
+        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s{cols}
+        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+    )"""
+
+
+def _edges_sql(*extra: str, name: str = "edges") -> str:
+    """CTE ``name (src, dst, *extra)``: both directions of every pair, the
+    twin of ``_sym_edges``. ``extra`` are SELECT items over ``pairs``."""
+    cols = "".join(f", {x}" for x in extra)
+    return f"""{name} AS (
+        SELECT c * 2 AS src, s * 2 + 1 AS dst{cols} FROM pairs
+        UNION ALL
+        SELECT s * 2 + 1 AS src, c * 2 AS dst{cols} FROM pairs
+    )"""
+
+
+_SUPPLIER_SEEDS_SQL = """seeds AS (
+        SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_suppkey % 10 = 0
+    )"""
+
+
+def _entity_sql(col: str) -> str:
+    """SELECT items decoding node id ``col``, the twin of ``_entity``."""
+    return (
+        f"CAST({col} % 2 AS INTEGER) AS is_supplier, "
+        f"CAST({col} // 2 AS BIGINT) AS entity_id"
+    )
+
+
+def _pagerank_iter_sql(prev: str, out: str) -> str:
+    """One unrolled integer-PageRank iteration (see operators/graph.py:
+    pagerank_integer — div of positive ints matches Spark's div exactly)."""
+    return f"""{out} AS (
+        SELECT e.dst AS node,
+               b.b + (85 * sum(p.r // e.outdeg)) // 100 AS r
+        FROM ed e JOIN {prev} p ON e.src = p.node CROSS JOIN base b
+        GROUP BY e.dst, b.b
+    )"""
+
+
+def _ppr_iter_sql(prev: str, out: str) -> str:
+    """One unrolled personalized-PageRank iteration: sparse contribution
+    join + FULL join against the seed restart vector (seeds regain their
+    restart mass even with zero in-contributions; reached non-seeds get
+    damped mass only)."""
+    return f"""{out} AS (
+        SELECT coalesce(c.node, sb.node) AS node,
+               coalesce(sb.b, 0) + (85 * coalesce(c.s, 0)) // 100 AS r
+        FROM (SELECT e.dst AS node, sum(p.r // e.outdeg) AS s
+              FROM ed e JOIN {prev} p ON e.src = p.node
+              GROUP BY e.dst) c
+        FULL JOIN seed_base sb ON c.node = sb.node
+    )"""
+
+
+def _kcore_round_sql(e_in: str, e_out: str, k: int) -> str:
+    """One unrolled peel round (see operators/graph.py:kcore_peel)."""
+    return f"""d_{e_out} AS (
+        SELECT src, count(*) AS n FROM {e_in} GROUP BY src
+    ),
+    k_{e_out} AS (SELECT src FROM d_{e_out} WHERE n >= {k}),
+    {e_out} AS (
+        SELECT {e_in}.src, {e_in}.dst FROM {e_in}
+        JOIN k_{e_out} a ON {e_in}.src = a.src
+        JOIN k_{e_out} b ON {e_in}.dst = b.src
+    )"""
+
+
+def _lpa_iter_sql(prev: str, cnt: str, out: str) -> str:
+    """One unrolled synchronous mode-LPA round (see operators/graph.py:
+    label_propagation_mode — argmax by (count desc, label asc))."""
+    return f"""{cnt} AS (
+        SELECT e.dst AS node, l.lab, count(*) AS cnt
+        FROM edges e JOIN {prev} l ON e.src = l.node
+        GROUP BY e.dst, l.lab
+    ),
+    {out} AS (
+        SELECT n.node, coalesce(w.lab, n.node) AS lab
+        FROM nodes n LEFT JOIN (
+            SELECT node, lab FROM (
+                SELECT node, lab, row_number() OVER (
+                    PARTITION BY node ORDER BY cnt DESC, lab ASC) AS rn
+                FROM {cnt}) t
+            WHERE rn = 1
+        ) w ON n.node = w.node
+    )"""
+
+
+# The Adamic-Adar weight table (pipeline_common._AA_LOG2_MICRO) as a SQL
+# array literal body.
+_AA_LOG2_MICRO_SQL = ", ".join(str(w) for w in _AA_LOG2_MICRO)
+
 
 @register(
     "graph_pagerank_trading",
     f"""
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst FROM pairs
-    ),
+    {_pairs_sql()},
+    {_edges_sql()},
     deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
     ed AS (SELECT e.src, e.dst, d.outdeg FROM edges e JOIN deg d ON e.src = d.src),
     n AS (SELECT count(*) AS n FROM deg),
@@ -98,8 +216,7 @@ def _sym_edges(pairs: DataFrame, extras: "dict[str, object] | None" = None) -> D
     {_pagerank_iter_sql("r0", "r1")},
     {_pagerank_iter_sql("r1", "r2")},
     {_pagerank_iter_sql("r2", "r3")}
-    SELECT CAST(node % 2 AS INTEGER) AS is_supplier,
-           CAST(node // 2 AS BIGINT) AS entity_id,
+    SELECT {_entity_sql("node")},
            CAST(r AS BIGINT) AS rank_micro
     FROM r3
     """,
@@ -118,18 +235,10 @@ def _sym_edges(pairs: DataFrame, extras: "dict[str, object] | None" = None) -> D
 def graph_pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank_integer
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = _sym_edges(pairs)
+    edges = _sym_edges(_trading_pairs(spark, sf_dir))
     r = pagerank_integer(edges, iters=3)
     return r.select(
-        (F.col("node") % 2).cast("int").alias("is_supplier"),
-        F.expr("node div 2").cast("long").alias("entity_id"),
+        *_entity("node"),
         F.col("rank_micro").cast("long").alias("rank_micro"),
     )
 
@@ -209,20 +318,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_khop_reachability",
-    """
-    WITH RECURSIVE
-    pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst FROM pairs
-    ),
-    seeds AS (
-        SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_suppkey % 10 = 0
-    ),
+    f"""
+    {_pairs_sql(recursive=True)},
+    {_edges_sql()},
+    {_SUPPLIER_SEEDS_SQL},
     reach AS (
         SELECT node, 0 AS hops FROM seeds
         UNION
@@ -230,8 +329,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM reach r JOIN edges e ON e.src = r.node
         WHERE r.hops < 3
     )
-    SELECT CAST(node % 2 AS INTEGER)  AS is_supplier,
-           CAST(node // 2 AS BIGINT)  AS entity_id,
+    SELECT {_entity_sql("node")},
            CAST(min(hops) AS INTEGER) AS hops
     FROM reach GROUP BY node
     """,
@@ -250,44 +348,23 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bfs_min_hops
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = _sym_edges(pairs)
-    seeds = (
-        _t(spark, sf_dir, "supplier")
-        .filter(F.col("s_suppkey") % 10 == 0)
-        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
-    )
-    reach = bfs_min_hops(edges, seeds, max_hops=3)
+    edges = _sym_edges(_trading_pairs(spark, sf_dir))
+    reach = bfs_min_hops(edges, _supplier_seeds(spark, sf_dir), max_hops=3)
     return reach.select(
-        (F.col("node") % 2).cast("int").alias("is_supplier"),
-        F.expr("node div 2").cast("long").alias("entity_id"),
+        *_entity("node"),
         F.col("hops").cast("int").alias("hops"),
     )
 
 
 @register(
     "graph_temporal_reachability",
-    """
-    WITH RECURSIVE
-    pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s,
-               CAST(epoch_us(o.o_orderdate) // 86400000000 AS BIGINT) AS d
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst, d AS t FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst, d AS t FROM pairs
-    ),
-    seeds AS (
-        SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_suppkey % 10 = 0
-    ),
+    f"""
+    {_pairs_sql(
+        "CAST(epoch_us(o.o_orderdate) // 86400000000 AS BIGINT) AS d",
+        recursive=True,
+    )},
+    {_edges_sql("d AS t")},
+    {_SUPPLIER_SEEDS_SQL},
     walk AS (
         SELECT node, CAST(0 AS BIGINT) AS arr, 0 AS hops FROM seeds
         UNION
@@ -295,8 +372,7 @@ def graph_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM walk w JOIN edges e ON e.src = w.node AND e.t >= w.arr
         WHERE w.hops < 3
     )
-    SELECT CAST(node % 2 AS INTEGER) AS is_supplier,
-           CAST(node // 2 AS BIGINT)  AS entity_id,
+    SELECT {_entity_sql("node")},
            CAST(min(arr) AS BIGINT)  AS arrival_day
     FROM walk GROUP BY node
     """,
@@ -317,47 +393,23 @@ def graph_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import temporal_reachability
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(
-            F.col("o_custkey").alias("c"),
-            F.col("l_suppkey").alias("s"),
-            F.expr("unix_micros(o_orderdate) div 86400000000").alias("d"),
-        )
-        .distinct()
+    pairs = _trading_pairs(
+        spark, sf_dir, F.expr("unix_micros(o_orderdate) div 86400000000").alias("d")
     )
     edges = _sym_edges(pairs, {"t": F.col("d")})
-    seeds = (
-        _t(spark, sf_dir, "supplier")
-        .filter(F.col("s_suppkey") % 10 == 0)
-        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
-    )
-    arr = temporal_reachability(edges, seeds, rounds=3)
+    arr = temporal_reachability(edges, _supplier_seeds(spark, sf_dir), rounds=3)
     return arr.select(
-        (F.col("node") % 2).cast("int").alias("is_supplier"),
-        F.expr("node div 2").cast("long").alias("entity_id"),
+        *_entity("node"),
         F.col("arrival").cast("long").alias("arrival_day"),
     )
 
 
 @register(
     "graph_weighted_sssp",
-    """
-    WITH RECURSIVE
-    pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst, 1 + (c + s) % 5 AS w FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst, 1 + (c + s) % 5 AS w FROM pairs
-    ),
-    seeds AS (
-        SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_suppkey % 10 = 0
-    ),
+    f"""
+    {_pairs_sql(recursive=True)},
+    {_edges_sql("1 + (c + s) % 5 AS w")},
+    {_SUPPLIER_SEEDS_SQL},
     walk AS (
         SELECT node, CAST(0 AS BIGINT) AS cost, 0 AS hops FROM seeds
         UNION
@@ -365,8 +417,7 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM walk wk JOIN edges e ON e.src = wk.node
         WHERE wk.hops < 4
     )
-    SELECT CAST(node % 2 AS INTEGER) AS is_supplier,
-           CAST(node // 2 AS BIGINT)  AS entity_id,
+    SELECT {_entity_sql("node")},
            CAST(min(cost) AS BIGINT) AS cost
     FROM walk GROUP BY node
     """,
@@ -387,23 +438,11 @@ def graph_temporal_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bellman_ford_bounded
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = _sym_edges(pairs, {"w": F.lit(1) + (F.col("c") + F.col("s")) % 5})
-    seeds = (
-        _t(spark, sf_dir, "supplier")
-        .filter(F.col("s_suppkey") % 10 == 0)
-        .select((F.col("s_suppkey") * 2 + 1).alias("node"))
-    )
-    dist = bellman_ford_bounded(edges, seeds, rounds=4)
+    w = F.lit(1) + (F.col("c") + F.col("s")) % 5
+    edges = _sym_edges(_trading_pairs(spark, sf_dir), {"w": w})
+    dist = bellman_ford_bounded(edges, _supplier_seeds(spark, sf_dir), rounds=4)
     return dist.select(
-        (F.col("node") % 2).cast("int").alias("is_supplier"),
-        F.expr("node div 2").cast("long").alias("entity_id"),
+        *_entity("node"),
         F.col("cost").cast("long").alias("cost"),
     )
 
@@ -411,20 +450,12 @@ def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_kcore_peel",
     f"""
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    e0 AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst FROM pairs
-    ),
+    {_pairs_sql()},
+    {_edges_sql(name="e0")},
     {_kcore_round_sql("e0", "e1", 20)},
     {_kcore_round_sql("e1", "e2", 20)},
     {_kcore_round_sql("e2", "e3", 20)}
-    SELECT CAST(src % 2 AS INTEGER)  AS is_supplier,
-           CAST(src // 2 AS BIGINT)  AS entity_id,
+    SELECT {_entity_sql("src")},
            CAST(count(*) AS BIGINT)  AS deg
     FROM e3 GROUP BY src
     """,
@@ -444,18 +475,10 @@ def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import kcore_peel
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = _sym_edges(pairs)
+    edges = _sym_edges(_trading_pairs(spark, sf_dir))
     core = kcore_peel(edges, k=20, rounds=3)
     return core.select(
-        (F.col("node") % 2).cast("int").alias("is_supplier"),
-        F.expr("node div 2").cast("long").alias("entity_id"),
+        *_entity("node"),
         F.col("deg").cast("long").alias("deg"),
     )
 
@@ -463,21 +486,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_label_propagation",
     f"""
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst FROM pairs
-    ),
+    {_pairs_sql()},
+    {_edges_sql()},
     nodes AS (SELECT DISTINCT src AS node FROM edges),
     lab0 AS (SELECT node, node AS lab FROM nodes),
     {_lpa_iter_sql("lab0", "cnt1", "lab1")},
     {_lpa_iter_sql("lab1", "cnt2", "lab2")}
-    SELECT CAST(node % 2 AS INTEGER)  AS is_supplier,
-           CAST(node // 2 AS BIGINT)  AS entity_id,
+    SELECT {_entity_sql("node")},
            CAST(lab AS BIGINT)        AS community
     FROM lab2
     """,
@@ -496,18 +511,10 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import label_propagation_mode
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = _sym_edges(pairs)
+    edges = _sym_edges(_trading_pairs(spark, sf_dir))
     lab = label_propagation_mode(edges, iters=2)
     return lab.select(
-        (F.col("node") % 2).cast("int").alias("is_supplier"),
-        F.expr("node div 2").cast("long").alias("entity_id"),
+        *_entity("node"),
         F.col("community").cast("long").alias("community"),
     )
 
@@ -515,15 +522,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_adamic_adar_links",
     f"""
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst FROM pairs
-    ),
+    {_pairs_sql()},
+    {_edges_sql()},
     deg AS (SELECT src AS node, count(*) AS d FROM edges GROUP BY src),
     -- low-degree connector apexes only (<= 64): bounds the wedge
     -- fan-out AND matches Adamic-Adar's rationale (hubs carry little
@@ -617,15 +617,11 @@ def graph_adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import _edges_on_disk, _exchange_width
     from ..operators.scalars import checkpoint_observed
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # r14: the packed-key scale gate's max-node scan — previously its own
     # driver job over the checkpointed pairs (~0.5 s at sf10) — rides the
     # pairs checkpoint as an observed metric instead.
     pairs, pair_metrics = checkpoint_observed(
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct(),
+        _trading_pairs(spark, sf_dir),
         F.max(F.greatest(F.col("c") * 2, F.col("s") * 2 + 1)).alias("m"),
     )
     max_node = pair_metrics["m"]
@@ -970,15 +966,8 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_pagerank_personalized",
     f"""
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (
-        SELECT c * 2 AS src, s * 2 + 1 AS dst FROM pairs
-        UNION ALL
-        SELECT s * 2 + 1 AS src, c * 2 AS dst FROM pairs
-    ),
+    {_pairs_sql()},
+    {_edges_sql()},
     deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
     ed AS (SELECT e.src, e.dst, d.outdeg FROM edges e JOIN deg d ON e.src = d.src),
     seeds AS (
@@ -996,8 +985,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_ppr_iter_sql("r0", "r1")},
     {_ppr_iter_sql("r1", "r2")},
     {_ppr_iter_sql("r2", "r3")}
-    SELECT CAST(node % 2 AS INTEGER) AS is_supplier,
-           CAST(node // 2 AS BIGINT) AS entity_id,
+    SELECT {_entity_sql("node")},
            CAST(r AS BIGINT) AS rank_micro
     FROM r3
     """,
@@ -1016,14 +1004,7 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank_personalized_integer
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    edges = _sym_edges(pairs)
+    edges = _sym_edges(_trading_pairs(spark, sf_dir))
     seeds = (
         _t(spark, sf_dir, "customer")
         .filter(F.col("c_nationkey") == 0)
@@ -1031,19 +1012,15 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r = pagerank_personalized_integer(edges, seeds, iters=3)
     return r.select(
-        (F.col("node") % 2).cast("int").alias("is_supplier"),
-        F.expr("node div 2").cast("long").alias("entity_id"),
+        *_entity("node"),
         F.col("rank_micro").cast("long").alias("rank_micro"),
     )
 
 
 @register(
     "graph_degree_distribution",
-    """
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
+    f"""
+    {_pairs_sql()},
     deg AS (
         SELECT node, count(*) AS d FROM (
             SELECT c * 2 AS node FROM pairs
@@ -1078,13 +1055,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at any scale.",
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
+    pairs = _trading_pairs(spark, sf_dir)
     deg = (
         pairs.select((F.col("c") * 2).alias("node"))
         .unionAll(pairs.select((F.col("s") * 2 + 1).alias("node")))
@@ -1115,15 +1086,12 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_hits_integer",
-    """
+    f"""
     -- pairs is MATERIALIZED: four downstream CTE references otherwise
     -- inline the orders x lineitem join + distinct four times, which
     -- aborted DuckDB (OOM) at sf1.0; materialized it runs once (46 s),
     -- mirroring the Spark side's _edges_on_disk one-time materialization
-    WITH pairs AS MATERIALIZED (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
+    {_pairs_sql(materialized=True)},
     h0 AS (
         SELECT c, CAST(1000000 AS BIGINT) AS h
         FROM (SELECT DISTINCT c FROM pairs)
@@ -1174,14 +1142,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_hits_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import hits_integer
 
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
-    return hits_integer(pairs, iters=2)
+    return hits_integer(_trading_pairs(spark, sf_dir), iters=2)
 
 
 @register(
@@ -1279,11 +1240,8 @@ def graph_copurchase_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_degree_assortativity",
-    """
-    WITH pairs AS (
-        SELECT DISTINCT o.o_custkey AS c, l.l_suppkey AS s
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
+    f"""
+    {_pairs_sql()},
     dc AS (SELECT c, CAST(count(*) AS BIGINT) AS d FROM pairs GROUP BY c),
     ds AS (SELECT s, CAST(count(*) AS BIGINT) AS d FROM pairs GROUP BY s),
     e AS (
@@ -1322,12 +1280,8 @@ def graph_copurchase_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "aggregated, no iteration.",
 )
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
-        o.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
+        _trading_pairs(spark, sf_dir)
         # Three consumers (two degree aggregates + the edge join) would
         # re-run the 60M-row join+distinct subtree three times (84 s at
         # the generated sf10); one eager materialization bounds it to

@@ -19,31 +19,19 @@ from ..operators.dedup import (
     simhash_signatures,
 )
 from ..operators.similarity import brute_force_topk, cosine_col
-from ..operators.prefix import banded_running_sum
 from ..sources.readers import read_testdata_table as _t
-from .registry import register
-
-
-# PII_PATTERNS is the single source of truth shared by the Spark side and
-# the interpolated oracle SQL (functions/text.py)
-from ..functions.text import PII_PATTERNS as _PII_PATTERNS
-
-from .pipeline_common import (  # noqa: F401
+from .pipeline_common import (
     _CLUSTER_ORACLE,
     _JACCARD_ORACLE,
-    _KMEANS_ASSIGN_CTE,
     _LABELS_FULL_ORACLE,
     _MINHASH_DUP_ORACLE,
     _SURVIVORSHIP_ORACLE,
     _REP_ORACLE,
     _TOPK_ORACLE,
-    _cluster_pairs_lsh,
     _content_fingerprint,
-    _mean_token_len,
-    _n_ws_tokens,
     cluster_labels_lsh,
 )
-
+from .registry import register
 
 
 @register(

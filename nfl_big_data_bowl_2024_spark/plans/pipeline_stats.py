@@ -8,30 +8,13 @@ docstrings, oracle SQL and reference citations moved verbatim.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.dedup import (
-    minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    prefix_filter_jaccard_pairs,
-    simhash_signatures,
-)
-from ..operators.similarity import brute_force_topk, cosine_col
 from ..operators.prefix import banded_running_sum
 from ..sources.readers import read_testdata_table as _t
 from .registry import register
-
-
-# PII_PATTERNS is the single source of truth shared by the Spark side and
-# the interpolated oracle SQL (functions/text.py)
-from ..functions.text import PII_PATTERNS as _PII_PATTERNS
-
-from .pipeline_common import _content_fingerprint  # noqa: F401
-
 
 
 @register(

@@ -8,30 +8,13 @@ docstrings, oracle SQL and reference citations moved verbatim.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.dedup import (
-    minhash_lsh_candidates,
-    ngram_jaccard_pairs,
-    prefix_filter_jaccard_pairs,
-    simhash_signatures,
-)
-from ..operators.similarity import brute_force_topk, cosine_col
-from ..operators.prefix import banded_running_sum
 from ..sources.readers import read_testdata_table as _t
 from ..localrel import local_df as _local
-from .registry import register
-
-
-# PII_PATTERNS is the single source of truth shared by the Spark side and
-# the interpolated oracle SQL (functions/text.py)
-from ..functions.text import PII_PATTERNS as _PII_PATTERNS
-
-from .pipeline_common import (  # noqa: F401
+from .pipeline_common import (
     _BPE_RE,
     _BPE_SENT,
     _PII_EMAIL,
@@ -42,10 +25,9 @@ from .pipeline_common import (  # noqa: F401
     _PII_PHONE_TOK,
     _bpe_train_merges,
     _content_fingerprint,
-    _dsir_doc_weights,
     _n_ws_tokens,
 )
-
+from .registry import register
 
 
 # ---------------------------------------------------------------------------

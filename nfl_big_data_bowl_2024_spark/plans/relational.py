@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.windows import event_window, first_crossing
 from ..sources.readers import read_testdata_table as _t
 from ..localrel import local_df as _local
 from .registry import register

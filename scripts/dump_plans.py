@@ -6,9 +6,10 @@ makes them readable. Usage: python scripts/dump_plans.py > PLANS.md
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
 

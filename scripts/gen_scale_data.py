@@ -24,8 +24,10 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OFFSET = 100_000_000  # > any key in the source tree
 
 KEY_COLS = {
@@ -94,7 +96,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from nfl_big_data_bowl_2024_spark.sources.readers import read_testdata_table
 
     spark = (

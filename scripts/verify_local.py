@@ -4,7 +4,8 @@ Runs every ``__spark_entry__.queries()`` entry at sf0.01 on Spark and, where
 an oracle exists, the matching ``oracle_sql()`` on DuckDB over the same
 parquet; compares row count + column names + an order-insensitive value hash
 (columns sorted by name, rows sorted, floats repr'd). Prints one line per
-query and a summary. Usage:
+query, each with the Spark side's value hash (so two runs compare by a diff
+of their stdout with the trailing timings cut), and a summary. Usage:
 
     python scripts/verify_local.py [--sf /root/testdata/sf0.01] [query ...]
 """
@@ -12,10 +13,12 @@ query and a summary. Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 import traceback
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -74,7 +77,7 @@ def main() -> int:
 
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
 
     if "--vanilla" in sys.argv:
@@ -93,8 +96,6 @@ def main() -> int:
 
         spark = get_spark("verify-local")
     con = duckdb.connect()
-    import os
-
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
         # Scale-study trees (scripts/gen_scale_data.py) are Spark-written
@@ -109,15 +110,16 @@ def main() -> int:
     n_pass = n_fail = n_rowsonly = 0
     for name in names:
         t0 = time.time()
+        sh = "-"
         try:
             sdf = qs[name](spark, sf_dir)
             spdf = sdf.toPandas()
             scols = list(spdf.columns)
+            # the hash goes through the driver's pandas canonicalizer, so an
+            # unsortable column (list cells) must ERROR here like it does
+            # there, rows-only queries included
+            sh = value_hash_pdf(spdf)
             if name not in oracles:
-                # rows-only queries still go through the driver's pandas
-                # canonicalizer for the row count — an unsortable column
-                # (list cells) must ERROR here like it does there
-                _canon_pdf(spdf)
                 status = f"ROWS-ONLY ({len(spdf)} rows)"
                 n_rowsonly += 1
             else:
@@ -130,7 +132,6 @@ def main() -> int:
                     status = f"FAIL rows spark={len(spdf)} oracle={len(opdf)}"
                     n_fail += 1
                 else:
-                    sh = value_hash_pdf(spdf)
                     oh = value_hash_pdf(opdf)
                     if sh == oh:
                         status = f"PASS ({len(spdf)} rows)"
@@ -142,7 +143,10 @@ def main() -> int:
             status = f"ERROR {type(e).__name__}: {e}"
             traceback.print_exc()
             n_fail += 1
-        print(f"{name:35s} {status}  [{time.time() - t0:.1f}s]", flush=True)
+        print(
+            f"{name:35s} {status}  spark={sh}  [{time.time() - t0:.1f}s]",
+            flush=True,
+        )
 
     print(f"\npass={n_pass} fail={n_fail} rows_only={n_rowsonly} total={len(names)}")
     return 1 if n_fail else 0

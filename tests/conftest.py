@@ -1,10 +1,19 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# The checkout under test: tests import the package from THIS clone, never
+# from another one installed or checked out elsewhere.
+REPO_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO_ROOT))
+
+
+@pytest.fixture(scope="session")
+def repo_root() -> Path:
+    return REPO_ROOT
 
 
 @pytest.fixture(scope="session")

@@ -59,9 +59,6 @@ BOUNDARY_QUERIES = [
 
 @pytest.mark.parametrize("name", BOUNDARY_QUERIES)
 def test_rows_identical_across_partitionings(spark, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from nfl_big_data_bowl_2024_spark.plans import all_queries
 
     q = all_queries()[name]

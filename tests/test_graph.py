@@ -1,10 +1,11 @@
-"""Connected-components operator: known topologies + pure-Python union-find
-cross-check on random graphs."""
+"""Graph operators on known topologies and against pure-Python replays, and
+every trading-graph query against its DuckDB oracle."""
 
 from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from nfl_big_data_bowl_2024_spark.operators.graph import connected_components
@@ -477,3 +478,57 @@ def test_copurchase_unknown_size_takes_scale_safe_arm(spark, monkeypatch, tmp_pa
     plan = buf.getvalue()
     assert "collect_set" in plan
     assert "Join" not in plan
+
+
+SF01 = "/root/testdata/sf0.01"
+
+# Every registered query over the customer<->supplier trading graph. sf0.01,
+# not sf0.001: graph_kcore_peel keeps no node at sf0.001.
+TRADING_GRAPH_QUERIES = [
+    "graph_pagerank_trading",
+    "graph_khop_reachability",
+    "graph_temporal_reachability",
+    "graph_weighted_sssp",
+    "graph_kcore_peel",
+    "graph_label_propagation",
+    "graph_adamic_adar_links",
+    "graph_pagerank_personalized",
+    "graph_degree_distribution",
+    "graph_hits_integer",
+    "graph_degree_assortativity",
+]
+
+
+@pytest.fixture(scope="module")
+def verify_local(repo_root):
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "verify_local", repo_root / "scripts" / "verify_local.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="module")
+def sf01_duckdb():
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("customer", "supplier", "orders", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF01}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", TRADING_GRAPH_QUERIES)
+def test_trading_graph_query_matches_oracle(spark, sf01_duckdb, verify_local, name):
+    from nfl_big_data_bowl_2024_spark.plans import all_queries
+
+    spec = all_queries()[name]
+    got = spec.fn(spark, SF01).toPandas()
+    want = sf01_duckdb.execute(spec.oracle).df()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert len(got) == len(want) > 0
+    assert verify_local.value_hash_pdf(got) == verify_local.value_hash_pdf(want)

@@ -4,12 +4,8 @@ adversarial in-memory fixtures."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
-
-sys.path.insert(0, "/root/repo")
 
 SF = "/root/testdata/sf0.01"
 

@@ -14,9 +14,6 @@ def _plan(df) -> str:
 
 @pytest.fixture(scope="module")
 def queries():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from nfl_big_data_bowl_2024_spark.plans import all_queries
 
     return all_queries()

@@ -14,9 +14,6 @@ SF = "/root/testdata/sf0.001"
 
 
 def _registry():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from nfl_big_data_bowl_2024_spark.plans import all_queries
 
     return all_queries()
@@ -406,9 +403,6 @@ def test_psi_replay(spark):
     per-mille floor shares; PSI of a source against itself-complement
     must also come out ~0 when the source's distribution matches the
     rest (sanity bound, not asserted exactly — flooring)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from nfl_big_data_bowl_2024_spark.plans.pipeline_common import (
         LN2_MICRO,
         LN_MANTISSA_MICRO,

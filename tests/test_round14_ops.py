@@ -10,9 +10,6 @@ SF01 = "/root/testdata/sf0.01"
 
 
 def _registry():
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(__file__)))
     from nfl_big_data_bowl_2024_spark.plans import all_queries
 
     return all_queries()

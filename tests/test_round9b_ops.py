@@ -11,9 +11,6 @@ SF = "/root/testdata/sf0.001"
 
 
 def _registry():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from nfl_big_data_bowl_2024_spark.plans import all_queries
 
     return all_queries()

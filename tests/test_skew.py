@@ -108,9 +108,6 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
 
 
 def test_approx_quantiles_error_bound(spark):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from nfl_big_data_bowl_2024_spark.plans import all_queries
 
     rows = all_queries()["approx_quantiles"].fn(
