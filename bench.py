@@ -438,69 +438,10 @@ def _merge_bench_samples(extra: dict) -> None:
         json.dump(doc, fh, indent=1, sort_keys=True)
 
 
-def sf10_graph_mode() -> None:
-    """Run the graph fixpoints once each at the generated sf10 point and
-    record machine-readable timings into BENCH_SAMPLES.json."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF10_DIR", "/tmp/scaledata/sf10")
-    if not os.path.isdir(sf_dir):
-        print(json.dumps({"metric": "sf10_graph_total", "value": None,
-                          "unit": "sec", "error": f"no sf10 tree at {sf_dir} "
-                          "(generate with scripts/gen_scale_data.py)"}))
-        return
-    from nfl_big_data_bowl_2024_spark.plans import all_queries
-    from nfl_big_data_bowl_2024_spark.session import get_spark
-
-    registry = all_queries()
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in SF10_GRAPH:
-        # ONE SparkSession PER QUERY: these are iterative fixpoints that
-        # each re-exchange a 100M-row edge relation dozens of times, and
-        # shuffle files are only deleted when the driver GC collects the
-        # ShuffleDependency — across a five-query sweep in one session
-        # that retention exceeded the box's free disk (measured: the
-        # fifth query died with 'No space left on device' while the
-        # first four held ~70 GB of dead shuffle blocks). Session
-        # teardown removes the app's block-manager dirs, bounding peak
-        # disk to one query's live footprint.
-        spark = get_spark("bench-sf10-graph")
-        spark.sparkContext.setLogLevel("ERROR")
-        print(f"[sf10-graph] running {name}", file=sys.stderr, flush=True)
-        t0 = time.time()
-        try:
-            registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[name] = round(time.time() - t0, 1)
-        except Exception as exc:  # record, keep measuring the rest
-            errors[name] = str(exc).split("\n")[0][:200]
-        print(
-            f"[sf10-graph] {name}: "
-            f"{timings.get(name, 'FAILED')}",
-            file=sys.stderr,
-            flush=True,
-        )
-        spark.stop()
-    total = round(sum(timings.values()), 1)
-    rec: dict = {"sf_dir": sf_dir, "total_sec": total, "timings": timings}
-    if errors:
-        rec["errors"] = errors
-    _merge_bench_samples({"sf10_graph": rec})
-    line: dict = {"metric": "sf10_graph_total", "value": total,
-                  "unit": "sec", "queries": timings}
-    if errors:
-        line["errors"] = errors
-    print(json.dumps(line, separators=(",", ":")))
-
-
 # Default query set for `--sf10-sweep`: the sf10 heavy tail (everything
 # that has ever exceeded ~30 s solo at the generated sf10) plus any query
 # whose code changed in the current round (edit per round). Each query
-# gets its OWN SparkSession (same rationale as sf10_graph_mode's
-# per-query sessions, extended per verdict r10 item 6: the r10 warm-sweep
-# inflated the CC family 2.3x over fresh-session solo numbers via
-# accumulated executor memory pressure — a sweep should measure the
-# operator, not the session history).
+# gets its OWN SparkSession (see sf10_sweep_mode).
 SF10_SWEEP_DEFAULT = [
     "dedup_cluster_assign",
     "dedup_cluster_representative",
@@ -539,6 +480,16 @@ def sf10_sweep_mode(names: list[str], key: str) -> None:
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for name in names:
+        # ONE SparkSession PER QUERY. Shuffle files are only deleted when
+        # the driver GC collects the ShuffleDependency, so across the
+        # five-query sf10 graph sweep in one session the dead shuffle
+        # blocks of the iterative fixpoints (~70 GB after four queries)
+        # filled the disk and the fifth query died with 'No space left on
+        # device'; session teardown removes the app's block-manager dirs.
+        # A shared session also inflated the CC family 2.3x over
+        # fresh-session solo numbers via accumulated executor memory
+        # pressure: a sweep should measure the operator, not the session
+        # history.
         spark = get_spark("bench-sf10-sweep")
         spark.sparkContext.setLogLevel("ERROR")
         print(f"[sf10-sweep] running {name}", file=sys.stderr, flush=True)
@@ -805,7 +756,7 @@ def main() -> None:
 
 if __name__ == "__main__":
     if "--sf10-graph" in sys.argv:
-        sf10_graph_mode()
+        sf10_sweep_mode(SF10_GRAPH, "sf10_graph")
     elif "--sf10-sweep" in sys.argv:
         _key = "sf10_sweep_latest"
         for _a in sys.argv[1:]:

@@ -78,12 +78,6 @@ def hashed_shingle_array(text_col: str, n: int = 8) -> Column:
     )
 
 
-def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 8) -> DataFrame:
-    """Distinct character n-gram shingles, exploded to (id, sh) rows — the
-    join-friendly form used by the exact-Jaccard verify stage."""
-    return df.select(F.col(id_col), F.explode(shingle_array(text_col, n)).alias("sh"))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,

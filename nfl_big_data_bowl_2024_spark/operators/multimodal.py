@@ -28,17 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-    ]
-)
-
-
 def with_binary_payload(df: DataFrame, text_col: str = "text", out_col: str = "payload") -> DataFrame:
     """Testdata adapter: UTF-8 bytes of a text column as the opaque payload
     (the testdata ships no real media; the byte-column plumbing is identical)."""

@@ -342,16 +342,29 @@ _SURVIVORSHIP_ORACLE = (
 )
 
 
-# DuckDB replay of kmeans_lloyd(k=8, iters=2, lowest-id seeds) ending in an
-# ``a2(vec_id, e, cid)`` assignment relation — the same iteration the
-# emb_kmeans_lloyd oracle replays, re-used by the SemDeDup oracle below.
-_KMEANS_ASSIGN_CTE = """
-    emb AS (
+# The k of the scale operating point as a SQL expression over ``n``, the
+# number of vectors: the next power of two above n/2048, at least 8.
+_AUTOK_SQL = (
+    "greatest(8, 1::BIGINT << length(format('{:b}',"
+    " greatest((n - 1) // 2048, 1))))"
+)
+
+
+def _kmeans_assign_sql(k: str) -> str:
+    """DuckDB replay of ``kmeans_lloyd(k, iters=2)`` seeded with the k
+    lowest-id vectors. ``k`` is a SQL expression over ``n``, the number of
+    vectors. Yields CTEs ``emb (vec_id, e)``, ``c1 (cid, e)`` (the refined
+    centroids) and ``a2 (vec_id, e, cid, d)`` (the final assignment and its
+    distance), plus ``kdef``, ``seeds``, ``d1``, ``a1`` and ``d2``."""
+    return f"""emb AS (
       SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
     ),
+    kdef AS (SELECT {k} AS k FROM (SELECT count(*) AS n FROM emb) c),
     seeds AS (
-      SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cid, e
-      FROM (SELECT * FROM emb ORDER BY vec_id LIMIT 8) s
+      SELECT cid, e FROM (
+        SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cid, e
+        FROM emb
+      ) s, kdef WHERE s.cid < kdef.k
     ),
     d1 AS (
       SELECT emb.vec_id, emb.e, seeds.cid,
@@ -376,12 +389,11 @@ _KMEANS_ASSIGN_CTE = """
       FROM emb CROSS JOIN c1
     ),
     a2 AS (
-      SELECT vec_id, e, cid FROM (
-        SELECT vec_id, e, cid,
+      SELECT vec_id, e, cid, d FROM (
+        SELECT vec_id, e, cid, d,
                row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
         FROM d2) t WHERE rn = 1
-    )
-"""
+    )"""
 
 (_PII_EMAIL, _PII_EMAIL_TOK), (_PII_IP, _PII_IP_TOK), (_PII_PHONE, _PII_PHONE_TOK) = (
     _PII_PATTERNS
@@ -446,6 +458,34 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("lr_micro").cast("long").alias("dsir_weight_micro"),
         )
     )
+
+
+# The oracle twin of ``_dsir_doc_weights`` up to its per-doc fold: CTEs
+# ``toks (doc_id, source, term)`` and ``ratio (term, lr_micro)``, plus the
+# ``lm`` and ``consts`` they are built from.
+_DSIR_RATIO_SQL = """toks AS (
+        SELECT doc_id, source, unnest(string_split(text, ' ')) AS term
+        FROM documents
+    ),
+    lm AS (
+        SELECT term, count(*) AS c_r,
+               CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
+                    AS BIGINT) AS c_t
+        FROM toks GROUP BY term
+    ),
+    consts AS (
+        SELECT CAST(sum(c_r) AS BIGINT) AS n_r,
+               CAST(sum(c_t) AS BIGINT) AS n_t,
+               count(*) AS v
+        FROM lm
+    ),
+    ratio AS (
+        SELECT term,
+               CAST(floor(ln(((c_t + 1.0) * (n_r + v)) /
+                             ((c_r + 1.0) * (n_t + v)))
+                          * 1000000.0 + 0.5) AS BIGINT) AS lr_micro
+        FROM lm, consts
+    )"""
 
 
 # Benford first-digit expected probabilities log10(1+1/d) in micro-units

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from ..operators.prefix import banded_running_sum
 from ..sources.readers import read_testdata_table as _t
 from .pipeline_common import (
+    _DSIR_RATIO_SQL,
     _content_fingerprint,
     _dsir_doc_weights,
     _n_ws_tokens,
@@ -532,30 +533,8 @@ def doc_select_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_dsir_importance",
-    """
-    WITH toks AS (
-        SELECT doc_id, source, unnest(string_split(text, ' ')) AS term
-        FROM documents
-    ),
-    lm AS (
-        SELECT term, count(*) AS c_r,
-               CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS c_t
-        FROM toks GROUP BY term
-    ),
-    consts AS (
-        SELECT CAST(sum(c_r) AS BIGINT) AS n_r,
-               CAST(sum(c_t) AS BIGINT) AS n_t,
-               count(*) AS v
-        FROM lm
-    ),
-    ratio AS (
-        SELECT term,
-               CAST(floor(ln(((c_t + 1.0) * (n_r + v)) /
-                             ((c_r + 1.0) * (n_t + v)))
-                          * 1000000.0 + 0.5) AS BIGINT) AS lr_micro
-        FROM lm, consts
-    )
+    f"""
+    WITH {_DSIR_RATIO_SQL}
     SELECT t.doc_id, count(*) AS n_toks,
            CAST(sum(r.lr_micro) AS BIGINT) AS dsir_weight_micro
     FROM toks t JOIN ratio r USING (term)
@@ -582,30 +561,8 @@ def doc_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_dsir_select",
-    """
-    WITH toks AS (
-        SELECT doc_id, source, unnest(string_split(text, ' ')) AS term
-        FROM documents
-    ),
-    lm AS (
-        SELECT term, count(*) AS c_r,
-               CAST(sum(CASE WHEN source = 'src0' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS c_t
-        FROM toks GROUP BY term
-    ),
-    consts AS (
-        SELECT CAST(sum(c_r) AS BIGINT) AS n_r,
-               CAST(sum(c_t) AS BIGINT) AS n_t,
-               count(*) AS v
-        FROM lm
-    ),
-    ratio AS (
-        SELECT term,
-               CAST(floor(ln(((c_t + 1.0) * (n_r + v)) /
-                             ((c_r + 1.0) * (n_t + v)))
-                          * 1000000.0 + 0.5) AS BIGINT) AS lr_micro
-        FROM lm, consts
-    ),
+    f"""
+    WITH {_DSIR_RATIO_SQL},
     w AS (
         SELECT t.doc_id, count(*) AS n_toks,
                CAST(sum(r.lr_micro) AS BIGINT) AS dsir_weight_micro
@@ -634,8 +591,9 @@ def doc_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "log-ratio range over milli-steps, not by corpus size): per-band "
     "token totals, triangular band self-join for exclusive offsets, one "
     "band-partitioned window. Weights ride the exact-integer micro-unit "
-    "machinery of doc_dsir_importance, so the ordering has no float "
-    "ties to flip.",
+    "machinery of doc_dsir_importance (it composes on _dsir_doc_weights; "
+    "oracle: _DSIR_RATIO_SQL), so the ordering has no float ties to "
+    "flip.",
 )
 def doc_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scalars import checkpoint_with_scalar

@@ -4,7 +4,9 @@ Eleven queries run over the customer<->supplier trading graph (distinct
 (customer, supplier) pairs of orders x lineitem). Each side is built from
 one fragment per piece: ``_trading_pairs``/``_sym_edges``/``_entity`` on
 Spark, ``_pairs_sql``/``_edges_sql``/``_entity_sql`` in the DuckDB
-oracles, whose unrolled per-round CTE builders live here as well.
+oracles, whose unrolled per-round CTE builders live here as well. The
+two part co-purchase queries (triangles, clustering coefficient) share
+``_part_copurchase_pairs`` and the oracle CTEs ``_PART_TRIANGLES_SQL``.
 """
 
 from __future__ import annotations
@@ -243,10 +245,34 @@ def graph_pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "graph_triangle_count",
-    """
-    WITH lo AS (
+# ---------------------------------------------------------------------------
+# The part co-purchase graph (parts sharing an order, every 4th order),
+# shared by graph_triangle_count and graph_clustering_coeff.
+# ---------------------------------------------------------------------------
+
+
+def _part_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Part pairs ``(src, dst)`` with src < dst bought in one order, one row
+    per shared order (not yet distinct)."""
+    lo = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_orderkey") % 4 == 0)
+        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
+    )
+    return (
+        lo.alias("x")
+        .join(
+            lo.alias("y"),
+            (F.col("x.ok") == F.col("y.ok")) & (F.col("x.p") < F.col("y.p")),
+        )
+        .select(F.col("x.p").alias("src"), F.col("y.p").alias("dst"))
+    )
+
+
+# The oracle twin of the triangle enumeration over those pairs: CTEs
+# ``canon (a, b)`` (the distinct pairs), ``deg (node, deg)`` and
+# ``tri (x, y, z)`` (each triangle once), plus ``lo`` and ``oriented``.
+_PART_TRIANGLES_SQL = """lo AS (
         SELECT l_orderkey AS ok, l_partkey AS p
         FROM lineitem WHERE l_orderkey % 4 = 0
     ),
@@ -275,7 +301,13 @@ def graph_pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM oriented w1
         JOIN oriented w2 ON w1.lo = w2.lo AND w1.hi <> w2.hi
         JOIN oriented e ON e.lo = w1.hi AND e.hi = w2.hi
-    )
+    )"""
+
+
+@register(
+    "graph_triangle_count",
+    f"""
+    WITH {_PART_TRIANGLES_SQL}
     SELECT node AS part_id, CAST(count(*) AS BIGINT) AS n_triangles
     FROM (
         SELECT x AS node FROM tri
@@ -299,22 +331,10 @@ def graph_pagerank_trading(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangle_counts
 
-    lo = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 4 == 0)
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
-    )
-    pairs = (
-        lo.alias("x")
-        .join(
-            lo.alias("y"),
-            (F.col("x.ok") == F.col("y.ok")) & (F.col("x.p") < F.col("y.p")),
-        )
-        .select(F.col("x.p").alias("src"), F.col("y.p").alias("dst"))
-    )
-    return triangle_counts(pairs).select(
+    return triangle_counts(_part_copurchase_pairs(spark, sf_dir)).select(
         F.col("node").alias("part_id"), "n_triangles"
     )
+
 
 @register(
     "graph_khop_reachability",
@@ -864,37 +884,8 @@ def spatial_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_clustering_coeff",
-    """
-    WITH lo AS (
-        SELECT l_orderkey AS ok, l_partkey AS p
-        FROM lineitem WHERE l_orderkey % 4 = 0
-    ),
-    canon AS (
-        SELECT DISTINCT a.p AS a, b.p AS b
-        FROM lo a JOIN lo b ON a.ok = b.ok AND a.p < b.p
-    ),
-    deg AS (
-        SELECT node, count(*) AS deg FROM (
-            SELECT a AS node FROM canon
-            UNION ALL
-            SELECT b AS node FROM canon
-        ) GROUP BY node
-    ),
-    oriented AS (
-        SELECT CASE WHEN (da.deg < db.deg) OR (da.deg = db.deg AND c.a < c.b)
-                    THEN c.a ELSE c.b END AS lo,
-               CASE WHEN (da.deg < db.deg) OR (da.deg = db.deg AND c.a < c.b)
-                    THEN c.b ELSE c.a END AS hi
-        FROM canon c
-        JOIN deg da ON c.a = da.node
-        JOIN deg db ON c.b = db.node
-    ),
-    tri AS (
-        SELECT w1.lo AS x, w1.hi AS y, w2.hi AS z
-        FROM oriented w1
-        JOIN oriented w2 ON w1.lo = w2.lo AND w1.hi <> w2.hi
-        JOIN oriented e ON e.lo = w1.hi AND e.hi = w2.hi
-    ),
+    f"""
+    WITH {_PART_TRIANGLES_SQL},
     pt AS (
         SELECT node, count(*) AS n_tri
         FROM (
@@ -916,6 +907,7 @@ def spatial_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the standard 'how clique-like is this node's neighborhood' metric "
     "(Watts-Strogatz), and the canonical CONSUMER of per-node triangle "
     "counts. Rides graph_triangle_count's degree-oriented enumeration "
+    "(it composes on _part_copurchase_pairs; oracle: _PART_TRIANGLES_SQL) "
     "(out-degree capped at O(sqrt(E)), hot hubs contribute zero wedges "
     "at their center) plus one left join back to the degree relation so "
     "triangle-free nodes report lcc = 0 instead of vanishing. Integer "
@@ -925,20 +917,7 @@ def spatial_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import triangle_counts
 
-    lo = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 4 == 0)
-        .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
-    )
-    pairs = (
-        lo.alias("x")
-        .join(
-            lo.alias("y"),
-            (F.col("x.ok") == F.col("y.ok")) & (F.col("x.p") < F.col("y.p")),
-        )
-        .select(F.col("x.p").alias("src"), F.col("y.p").alias("dst"))
-        .distinct()
-    )
+    pairs = _part_copurchase_pairs(spark, sf_dir).distinct()
     deg = (
         pairs.select(F.col("src").alias("node"))
         .unionAll(pairs.select(F.col("dst").alias("node")))
@@ -1055,11 +1034,10 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at any scale.",
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _trading_pairs(spark, sf_dir)
+    # one pass over the pairs: _sym_edges emits both endpoints of a pair
     deg = (
-        pairs.select((F.col("c") * 2).alias("node"))
-        .unionAll(pairs.select((F.col("s") * 2 + 1).alias("node")))
-        .groupBy("node")
+        _sym_edges(_trading_pairs(spark, sf_dir))
+        .groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
     )
     pow2 = spark.range(41).select(

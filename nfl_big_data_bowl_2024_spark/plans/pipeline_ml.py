@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.readers import read_testdata_table as _t
-from .pipeline_common import _mean_token_len, _n_ws_tokens
+from .pipeline_common import (
+    _AA_LOG2_MICRO,
+    _kmeans_assign_sql,
+    _mean_token_len,
+    _n_ws_tokens,
+)
 from .registry import register
 
 
@@ -520,10 +525,40 @@ def ml_stump_split_finding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ml_roc_auc",
-    """
-    WITH pts AS (
+def _roc_rank_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-source ROC sufficient statistics ``(source, n_docs, n_pos,
+    r2_pos)`` of the n_chars score against the lang = 'en' label: ties
+    collapse to per-(source, score) count pairs, and ``r2_pos`` is the
+    positives' doubled midrank sum."""
+    d = _t(spark, sf_dir, "documents")
+    pts = d.groupBy("source", "n_chars").agg(
+        F.count(F.lit(1)).cast("long").alias("cnt"),
+        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
+        .cast("long")
+        .alias("cnt_pos"),
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("n_chars")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    rk = pts.select(
+        "source",
+        "cnt",
+        "cnt_pos",
+        (2 * F.coalesce(F.sum("cnt").over(w), F.lit(0)) + F.col("cnt") + 1).alias(
+            "r2"
+        ),
+    )
+    return rk.groupBy("source").agg(
+        F.sum("cnt").cast("long").alias("n_docs"),
+        F.sum("cnt_pos").cast("long").alias("n_pos"),
+        F.sum(F.col("cnt_pos") * F.col("r2")).cast("long").alias("r2_pos"),
+    )
+
+
+# The oracle twin of ``_roc_rank_stats``: CTEs ``pts``, ``rk`` and ``agg``.
+_ROC_RANK_STATS_SQL = """pts AS (
         SELECT source, n_chars,
                CAST(count(*) AS BIGINT) AS cnt,
                CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
@@ -544,7 +579,13 @@ def ml_stump_split_finding(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(sum(cnt_pos) AS BIGINT)       AS n_pos,
                CAST(sum(cnt_pos * r2) AS BIGINT)  AS r2_pos
         FROM rk GROUP BY source
-    )
+    )"""
+
+
+@register(
+    "ml_roc_auc",
+    f"""
+    WITH {_ROC_RANK_STATS_SQL}
     SELECT source, n_docs, n_pos,
            CASE WHEN n_pos = 0 OR n_pos = n_docs THEN NULL
                 ELSE CAST((r2_pos - n_pos * (n_pos + 1)) * 1000000
@@ -568,32 +609,7 @@ def ml_stump_split_finding(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the collapsed score points, one grouped fold.",
 )
 def ml_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    pts = d.groupBy("source", "n_chars").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("long")
-        .alias("cnt_pos"),
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("n_chars")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = pts.select(
-        "source",
-        "cnt",
-        "cnt_pos",
-        (2 * F.coalesce(F.sum("cnt").over(w), F.lit(0)) + F.col("cnt") + 1).alias(
-            "r2"
-        ),
-    )
-    agg = rk.groupBy("source").agg(
-        F.sum("cnt").cast("long").alias("n_docs"),
-        F.sum("cnt_pos").cast("long").alias("n_pos"),
-        F.sum(F.col("cnt_pos") * F.col("r2")).cast("long").alias("r2_pos"),
-    )
-    return agg.select(
+    return _roc_rank_stats(spark, sf_dir).select(
         "source",
         "n_docs",
         "n_pos",
@@ -890,8 +906,6 @@ def ml_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # adamic-adar inverse-log table (pipeline_common._AA_LOG2_MICRO, position
 # i+1); _NDCG_CUM[j] = sum of the first j discounts is the ideal-DCG
 # lookup for a source with j <= 10 positives.
-from .pipeline_common import _AA_LOG2_MICRO
-
 _NDCG_K = 10
 _NDCG_W = [_AA_LOG2_MICRO[i] for i in range(1, _NDCG_K + 1)]
 _NDCG_CUM = [0]
@@ -1066,13 +1080,10 @@ def ml_ndcg_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .pipeline_common import _KMEANS_ASSIGN_CTE
-
-
 @register(
     "ml_kmeans_silhouette",
     f"""
-    WITH {_KMEANS_ASSIGN_CTE},
+    WITH {_kmeans_assign_sql("8")},
     d2all AS (
         SELECT a2.vec_id, a2.cid AS own, c1.cid AS cand,
                floor(list_distance(a2.e, c1.e) * 1e9 + 0.5) / 1e9 AS d
@@ -1104,7 +1115,8 @@ from .pipeline_common import _KMEANS_ASSIGN_CTE
     """,
     doc="Simplified (centroid-based) silhouette per k-means cluster — the "
     "cluster-quality metric completing the k-means family (emb_kmeans_"
-    "lloyd trains, dedup_semantic consumes, this EVALUATES): for every "
+    "lloyd trains, dedup_semantic consumes, this EVALUATES; its oracle "
+    "composes on the same k-means replay, _kmeans_assign_sql): for every "
     "vector, a = distance to its own centroid, b = distance to the "
     "second-nearest centroid, s = (b - a) / max(a, b) in [-1, 1] — the "
     "classic silhouette with the O(n^2) mean-pairwise distances "
@@ -1929,29 +1941,8 @@ def ml_psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_auc_ci_hanley",
-    """
-    WITH pts AS (
-        SELECT source, n_chars,
-               CAST(count(*) AS BIGINT) AS cnt,
-               CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
-                    AS BIGINT) AS cnt_pos
-        FROM documents GROUP BY source, n_chars
-    ),
-    rk AS (
-        SELECT source, cnt, cnt_pos,
-               2 * coalesce(sum(cnt) OVER (
-                       PARTITION BY source ORDER BY n_chars
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) + cnt + 1 AS r2
-        FROM pts
-    ),
-    agg AS (
-        SELECT source,
-               CAST(sum(cnt) AS BIGINT)           AS n_docs,
-               CAST(sum(cnt_pos) AS BIGINT)       AS n_pos,
-               CAST(sum(cnt_pos * r2) AS BIGINT)  AS r2_pos
-        FROM rk GROUP BY source
-    ),
+    f"""
+    WITH {_ROC_RANK_STATS_SQL},
     auc AS (
         SELECT source, n_docs, n_pos, n_docs - n_pos AS n_neg,
                CAST((r2_pos - n_pos * (n_pos + 1)) * 1000000
@@ -1995,8 +1986,9 @@ def ml_psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="95% confidence interval for the per-source ROC-AUC via Hanley & "
     "McNeil (1982, public): SE^2 = (A(1-A) + (n+ - 1)(Q1 - A^2) + "
     "(n- - 1)(Q2 - A^2)) / (n+ n-) with Q1 = A/(2-A), Q2 = 2A^2/(1+A). "
-    "Zero extra scans beyond ml_roc_auc: the variance is pure "
-    "arithmetic on that query's sufficient statistics (n_docs, n_pos, "
+    "Zero extra scans beyond ml_roc_auc: it composes on that query's "
+    "_roc_rank_stats (oracle: _ROC_RANK_STATS_SQL), and the variance is "
+    "pure arithmetic on those sufficient statistics (n_docs, n_pos, "
     "doubled rank sum), so the plan is the SAME one exchange + "
     "per-source window + grouped fold, then a per-row epilogue. EXACT "
     "integers end to end including the square root: se_micro = "
@@ -2012,32 +2004,7 @@ def ml_psi_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "both classes present. CI clamped to [0, 1e6] micro.",
 )
 def ml_auc_ci_hanley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
-    pts = d.groupBy("source", "n_chars").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("long")
-        .alias("cnt_pos"),
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("n_chars")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    rk = pts.select(
-        "source",
-        "cnt",
-        "cnt_pos",
-        (
-            2 * F.coalesce(F.sum("cnt").over(w), F.lit(0)) + F.col("cnt") + 1
-        ).alias("r2"),
-    )
-    agg = rk.groupBy("source").agg(
-        F.sum("cnt").cast("long").alias("n_docs"),
-        F.sum("cnt_pos").cast("long").alias("n_pos"),
-        F.sum(F.col("cnt_pos") * F.col("r2")).cast("long").alias("r2_pos"),
-    )
-    auc = agg.filter(
+    auc = _roc_rank_stats(spark, sf_dir).filter(
         (F.col("n_pos") > 0) & (F.col("n_pos") < F.col("n_docs"))
     ).select(
         "source",

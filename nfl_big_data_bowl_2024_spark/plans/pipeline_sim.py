@@ -21,6 +21,7 @@ from ..operators.dedup import (
 from ..operators.similarity import brute_force_topk, cosine_col
 from ..sources.readers import read_testdata_table as _t
 from .pipeline_common import (
+    _AUTOK_SQL,
     _CLUSTER_ORACLE,
     _JACCARD_ORACLE,
     _LABELS_FULL_ORACLE,
@@ -29,6 +30,7 @@ from .pipeline_common import (
     _REP_ORACLE,
     _TOPK_ORACLE,
     _content_fingerprint,
+    _kmeans_assign_sql,
     cluster_labels_lsh,
 )
 from .registry import register
@@ -1251,42 +1253,8 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "emb_kmeans_lloyd",
-    """
-    WITH emb AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-    ),
-    seeds AS (
-      SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cid, e
-      FROM (SELECT * FROM emb ORDER BY vec_id LIMIT 8) s
-    ),
-    d1 AS (
-      SELECT emb.vec_id, emb.e, seeds.cid,
-             floor(list_distance(emb.e, seeds.e) * 1e9 + 0.5) / 1e9 AS d
-      FROM emb CROSS JOIN seeds
-    ),
-    a1 AS (
-      SELECT vec_id, e, cid FROM (
-        SELECT vec_id, e, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM d1) t WHERE rn = 1
-    ),
-    c1 AS (
-      SELECT cid, list(cv ORDER BY pos) AS e FROM (
-        SELECT cid, pos, floor(avg(v) * 1e6 + 0.5) / 1e6 AS cv FROM (
-          SELECT cid, unnest(e) AS v, unnest(generate_series(1, len(e))) AS pos
-          FROM a1) u GROUP BY cid, pos) g GROUP BY cid
-    ),
-    d2 AS (
-      SELECT emb.vec_id, c1.cid,
-             floor(list_distance(emb.e, c1.e) * 1e9 + 0.5) / 1e9 AS d
-      FROM emb CROSS JOIN c1
-    ),
-    a2 AS (
-      SELECT vec_id, cid, d FROM (
-        SELECT vec_id, cid, d,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM d2) t WHERE rn = 1
-    )
+    f"""
+    WITH {_kmeans_assign_sql("8")}
     SELECT cid AS cluster_id, count(*) AS n_members,
            floor(avg(d) * 1e4 + 0.5) / 1e4 AS avg_dist,
            min(vec_id) AS first_member_id
@@ -1301,7 +1269,8 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows. Distances round to 9 dp pre-argmin and refined centroids to "
     "6 dp pre-round-2, so a DuckDB oracle replays the whole iteration "
     "bit-identically. Output: per-cluster size, mean distance, lowest "
-    "member id (operators/clustering.py:kmeans_lloyd).",
+    "member id (operators/clustering.py:kmeans_lloyd; oracle: "
+    "_kmeans_assign_sql with k = 8).",
 )
 def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_lloyd
@@ -1318,52 +1287,6 @@ def emb_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_ASSIGN_AUTOK_CTE = """
-    emb AS (
-      SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings
-    ),
-    kdef AS (
-      SELECT greatest(8, 1::BIGINT << length(format('{:b}',
-                 greatest((count(*) - 1) // 2048, 1)))) AS k
-      FROM emb
-    ),
-    seeds AS (
-      SELECT cid, e FROM (
-        SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cid, e
-        FROM emb
-      ) s, kdef WHERE s.cid < kdef.k
-    ),
-    d1 AS (
-      SELECT emb.vec_id, emb.e, seeds.cid,
-             floor(list_distance(emb.e, seeds.e) * 1e9 + 0.5) / 1e9 AS d
-      FROM emb CROSS JOIN seeds
-    ),
-    a1 AS (
-      SELECT vec_id, e, cid FROM (
-        SELECT vec_id, e, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM d1) t WHERE rn = 1
-    ),
-    c1 AS (
-      SELECT cid, list(cv ORDER BY pos) AS e FROM (
-        SELECT cid, pos, floor(avg(v) * 1e6 + 0.5) / 1e6 AS cv FROM (
-          SELECT cid, unnest(e) AS v, unnest(generate_series(1, len(e))) AS pos
-          FROM a1) u GROUP BY cid, pos) g GROUP BY cid
-    ),
-    d2 AS (
-      SELECT emb.vec_id, emb.e, c1.cid,
-             floor(list_distance(emb.e, c1.e) * 1e9 + 0.5) / 1e9 AS d
-      FROM emb CROSS JOIN c1
-    ),
-    a2 AS (
-      SELECT vec_id, e, cid FROM (
-        SELECT vec_id, e, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-        FROM d2) t WHERE rn = 1
-    )
-"""
-
-
 # Scale-gated k for the PINNED-k SemDeDup twin (verdict r9 item 5): up to
 # the documented bound (n <= 32768 vectors — covers every oracle-gated
 # tree: sf0.01 through the generated sf1) k stays the attested constant 8,
@@ -1374,20 +1297,18 @@ _KMEANS_ASSIGN_AUTOK_CTE = """
 # gate is data-derived (count), not sf-flagged, so Spark and DuckDB
 # always agree at any tree.
 _SEMANTIC_K_GATE = 32768
-_KMEANS_ASSIGN_GATED_CTE = _KMEANS_ASSIGN_AUTOK_CTE.replace(
-    """SELECT greatest(8, 1::BIGINT << length(format('{:b}',
-                 greatest((count(*) - 1) // 2048, 1)))) AS k""",
-    f"""SELECT CASE WHEN count(*) <= {_SEMANTIC_K_GATE} THEN 8
-             ELSE greatest(8, 1::BIGINT << length(format('{{:b}}',
-                 greatest((count(*) - 1) // 2048, 1)))) END AS k""",
-)
-assert _KMEANS_ASSIGN_GATED_CTE != _KMEANS_ASSIGN_AUTOK_CTE
+_SEMANTIC_K_SQL = f"CASE WHEN n <= {_SEMANTIC_K_GATE} THEN 8 ELSE {_AUTOK_SQL} END"
+
+
+def _autok(n: int) -> int:
+    """The driver-side twin of ``_AUTOK_SQL`` for ``n`` vectors."""
+    return max(8, 1 << max((n - 1) // 2048, 1).bit_length())
 
 
 @register(
     "dedup_semantic",
     f"""
-    WITH {_KMEANS_ASSIGN_GATED_CTE},
+    WITH {_kmeans_assign_sql(_SEMANTIC_K_SQL)},
     p AS (
       SELECT a.vec_id AS ia, b.vec_id AS ib,
              floor(list_cosine_similarity(a.e, b.e) * 1e6 + 0.5) / 1e6 AS c
@@ -1413,7 +1334,8 @@ assert _KMEANS_ASSIGN_GATED_CTE != _KMEANS_ASSIGN_AUTOK_CTE
     "rule); dup_of = that lowest id. Cosine half-up floored to 6 dp on "
     "both engines pre-threshold; 2-ulp accumulation margins asserted in "
     "tests/test_dedup_similarity.py "
-    "(operators/clustering.py:semantic_dedup). Round 10: k is pinned at "
+    "(operators/clustering.py:semantic_dedup; oracle: the k-means replay "
+    "_kmeans_assign_sql with k = _SEMANTIC_K_SQL). Round 10: k is pinned at "
     "8 only up to the 32768-vector gate (every oracle-attested tree); "
     "beyond it both engines switch to the autok next-pow2(n/2048) rule "
     "and the BLAS assignment twin, so this registration no longer costs "
@@ -1431,8 +1353,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     if n <= _SEMANTIC_K_GATE:
         # attested operating point: pinned k, HOF assignment twin
         return semantic_dedup(e, tau=0.45, k=8, iters=2)
-    k = max(8, 1 << max((n - 1) // 2048, 1).bit_length())
-    return semantic_dedup(e, tau=0.45, k=k, iters=2, vectorized_assign=True)
+    return semantic_dedup(e, tau=0.45, k=_autok(n), iters=2, vectorized_assign=True)
 
 
 @register(
@@ -2054,7 +1975,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_semantic_autok",
     f"""
-    WITH {_KMEANS_ASSIGN_AUTOK_CTE},
+    WITH {_kmeans_assign_sql(_AUTOK_SQL)},
     p AS (
       SELECT a.vec_id AS ia, b.vec_id AS ib,
              floor(list_cosine_similarity(a.e, b.e) * 1e6 + 0.5) / 1e6 AS c
@@ -2073,7 +1994,7 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "constant but GROWS with the corpus — k = max(8, next power of two "
     "above n/2048), computed from the exact bounded count identically "
     "on both engines (binary-bit-length arithmetic, no libm log2; the "
-    "driver-side Python and the oracle's format('{{:b}}') agree for "
+    "driver-side Python and the oracle's format('{:b}') agree for "
     "every n). This enforces in code what dedup_semantic's doc only "
     "promised: cluster size stays ~2048 regardless of n, so the "
     "within-cluster pair volume is ~n x 2048 (linear, parallel across "
@@ -2084,7 +2005,8 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "lambdas per row and stops being viable past k~16), which is "
     "bit-equal to the HOF form by the same integer-grid argument as "
     "sim_pq_adc_topk's Arrow kernel. Fixed-k dedup_semantic stays "
-    "registered as the driver-attested operating-point twin.",
+    "registered as the driver-attested operating-point twin. Oracle: the "
+    "k-means replay _kmeans_assign_sql with k = _AUTOK_SQL.",
 )
 def dedup_semantic_autok(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import semantic_dedup
@@ -2094,10 +2016,7 @@ def dedup_semantic_autok(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
     n = e.count()  # bounded scalar: one long to the driver (sizes k)
-    k = max(8, 1 << max((n - 1) // 2048, 1).bit_length())
-    return semantic_dedup(
-        e, tau=0.45, k=k, iters=2, vectorized_assign=True
-    )
+    return semantic_dedup(e, tau=0.45, k=_autok(n), iters=2, vectorized_assign=True)
 
 
 @register(

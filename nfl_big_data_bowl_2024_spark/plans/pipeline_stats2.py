@@ -19,10 +19,48 @@ from ..sources.readers import read_testdata_table as _t
 from .registry import register
 
 
-@register(
-    "stat_kruskal_wallis",
-    """
-    WITH v AS (
+def _kw_rank_sums(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The Kruskal-Wallis rank grid shared by stat_kruskal_wallis and
+    stat_dunn_posthoc: per-event-type ``(event_type, n_i, r2_i)`` — group
+    size and doubled rank sum over the banded doubled-midrank grid of the
+    pooled cents values — and the 1-row tie term ``(t)`` = sum(dup^3 - dup)."""
+    v = _t(spark, sf_dir, "events").select(
+        "event_type",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
+    )
+    g = (
+        v.groupBy("cents")
+        .agg(F.count(F.lit(1)).alias("dup"))
+        .withColumn("band", F.expr("cents div 1024"))
+    )
+    cum = banded_running_sum(
+        g, "band", [F.col("cents")], "dup", out_col="cum", descending=False
+    )
+    r = cum.select(
+        "cents",
+        "dup",
+        (F.lit(2) * F.col("cum") - F.col("dup") + 1).alias("r2"),
+    )
+    ge = v.groupBy("event_type", "cents").agg(F.count(F.lit(1)).alias("cg"))
+    s = (
+        ge.join(F.broadcast(r.select("cents", "r2")), "cents")
+        .groupBy("event_type")
+        .agg(
+            F.sum("cg").cast("long").alias("n_i"),
+            F.sum(F.col("cg") * F.col("r2")).cast("long").alias("r2_i"),
+        )
+    )
+    ties = g.agg(
+        F.sum(F.expr("CAST(dup AS DECIMAL(28,0)) * dup * dup - dup"))
+        .cast("decimal(38,0)")
+        .alias("t")
+    )
+    return s, ties
+
+
+# The oracle twin of ``_kw_rank_sums``: CTEs ``s (event_type, n_i, r2_i)``
+# and ``ties (t)``, plus their inputs ``v``, ``g``, ``c``, ``r`` and ``ge``.
+_KW_RANK_SUMS_SQL = """v AS (
         SELECT event_type,
                CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
         FROM events
@@ -50,7 +88,13 @@ from .registry import register
         SELECT CAST(sum(CAST(dup AS HUGEINT) * dup * dup - dup) AS HUGEINT)
                    AS t
         FROM g
-    ),
+    )"""
+
+
+@register(
+    "stat_kruskal_wallis",
+    f"""
+    WITH {_KW_RANK_SUMS_SQL},
     parts AS (
         SELECT count(*) AS k,
                sum(n_i) AS n,
@@ -90,39 +134,7 @@ from .registry import register
     "is two partial-aggregated exchanges and a 1-row fold.",
 )
 def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-    )
-    g = (
-        v.groupBy("cents")
-        .agg(F.count(F.lit(1)).alias("dup"))
-        .withColumn("band", F.expr("cents div 1024"))
-    )
-    cum = banded_running_sum(
-        g, "band", [F.col("cents")], "dup", out_col="cum", descending=False
-    )
-    r = cum.select(
-        "cents",
-        "dup",
-        (F.lit(2) * F.col("cum") - F.col("dup") + 1).alias("r2"),
-    )
-    ge = v.groupBy("event_type", "cents").agg(F.count(F.lit(1)).alias("cg"))
-    s = (
-        ge.join(F.broadcast(r.select("cents", "r2")), "cents")
-        .groupBy("event_type")
-        .agg(
-            F.sum("cg").cast("long").alias("n_i"),
-            F.sum(F.col("cg") * F.col("r2")).cast("long").alias("r2_i"),
-        )
-    )
-    ties = g.agg(
-        F.sum(
-            F.expr("CAST(dup AS DECIMAL(28,0)) * dup * dup - dup")
-        )
-        .cast("decimal(38,0)")
-        .alias("t")
-    )
+    s, ties = _kw_rank_sums(spark, sf_dir)
     parts = s.agg(
         F.count(F.lit(1)).alias("k"),
         F.sum("n_i").alias("n"),
@@ -276,36 +288,8 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stat_dunn_posthoc",
-    """
-    WITH v AS (
-        SELECT event_type,
-               CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        FROM events
-    ),
-    g AS (SELECT cents, count(*) AS dup FROM v GROUP BY cents),
-    c AS (
-        SELECT cents, dup,
-               sum(dup) OVER (ORDER BY cents
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS cum
-        FROM g
-    ),
-    r AS (SELECT cents, dup, 2 * cum - dup + 1 AS r2 FROM c),
-    ge AS (
-        SELECT event_type, cents, count(*) AS cg
-        FROM v GROUP BY event_type, cents
-    ),
-    s AS (
-        SELECT ge.event_type,
-               CAST(sum(ge.cg) AS BIGINT)          AS n_i,
-               CAST(sum(ge.cg * r.r2) AS BIGINT)   AS r2_i
-        FROM ge JOIN r USING (cents) GROUP BY ge.event_type
-    ),
-    ties AS (
-        SELECT CAST(sum(CAST(dup AS HUGEINT) * dup * dup - dup) AS HUGEINT)
-                   AS t
-        FROM g
-    ),
+    f"""
+    WITH {_KW_RANK_SUMS_SQL},
     tot AS (SELECT CAST(sum(n_i) AS BIGINT) AS n FROM s),
     sig AS (
         SELECT CAST((1000000 * (CAST(n AS HUGEINT) * (n + 1) * (n - 1) - t))
@@ -338,45 +322,16 @@ def stat_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     "truncate-toward-zero division with positive operands (floor == "
     "truncate on both engines) in 128-bit intermediates (numerator ~ "
     "1e9 N^4 — DECIMAL(38)/HUGEINT holds to ~sf10-scale event counts, "
-    "documented bound; beyond that drop d to centi units). Reuses the "
-    "KW machinery wholesale: doubled midranks 2*cum - dup + 1 over the "
+    "documented bound; beyond that drop d to centi units). Composes on "
+    "stat_kruskal_wallis's _kw_rank_sums (oracle: _KW_RANK_SUMS_SQL): "
+    "doubled midranks 2*cum - dup + 1 over the "
     "distinct-cents grid via the banded prefix-sum operator (never a "
     "single-partition window), per-group (n_i, R2_i) from grid counts, "
     "then a bounded k x k broadcast self-join (k = #event types) — the "
     "pairwise panel costs nothing beyond the KW scan.",
 )
 def stat_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-    )
-    g = (
-        v.groupBy("cents")
-        .agg(F.count(F.lit(1)).alias("dup"))
-        .withColumn("band", F.expr("cents div 1024"))
-    )
-    cum = banded_running_sum(
-        g, "band", [F.col("cents")], "dup", out_col="cum", descending=False
-    )
-    r = cum.select(
-        "cents",
-        "dup",
-        (F.lit(2) * F.col("cum") - F.col("dup") + 1).alias("r2"),
-    )
-    ge = v.groupBy("event_type", "cents").agg(F.count(F.lit(1)).alias("cg"))
-    s = (
-        ge.join(F.broadcast(r.select("cents", "r2")), "cents")
-        .groupBy("event_type")
-        .agg(
-            F.sum("cg").cast("long").alias("n_i"),
-            F.sum(F.col("cg") * F.col("r2")).cast("long").alias("r2_i"),
-        )
-    )
-    ties = g.agg(
-        F.sum(F.expr("CAST(dup AS DECIMAL(28,0)) * dup * dup - dup"))
-        .cast("decimal(38,0)")
-        .alias("t")
-    )
+    s, ties = _kw_rank_sums(spark, sf_dir)
     tot = s.agg(F.sum("n_i").cast("long").alias("n"))
     # sigma2_micro ~ 1e6 * N^2 / 12 (8.3e18 at sf10) — past BIGINT's
     # comfort zone, and Spark's `div` returns BIGINT even for DECIMAL

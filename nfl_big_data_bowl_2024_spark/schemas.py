@@ -76,38 +76,6 @@ TRACKING = T.StructType(
     ]
 )
 
-# Stage-2 result tables (reference Data/tackler_*_FINAL.csv headers).
-TACKLER_MAX_PARAMS = T.StructType(
-    [
-        T.StructField("game_ID", T.LongType(), False),
-        T.StructField("play_ID", T.LongType(), False),
-        T.StructField("NFL_ID", T.LongType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("position", T.StringType(), True),
-        T.StructField("max_vel", T.DoubleType(), True),
-        T.StructField("max_accel", T.DoubleType(), True),
-    ]
-)
-
-TACKLER_YAP = T.StructType(
-    [
-        T.StructField("game_ID", T.LongType(), False),
-        T.StructField("play_ID", T.LongType(), False),
-        T.StructField("NFL_ID", T.LongType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("position", T.StringType(), True),
-        T.StructField("YAP", T.DoubleType(), True),
-    ]
-)
-
-RUN_ERRORS = T.StructType(
-    [
-        T.StructField("game_ID", T.LongType(), False),
-        T.StructField("play_ID", T.LongType(), False),
-        T.StructField("run_number", T.LongType(), False),
-    ]
-)
-
 # Event vocabulary (reference optimal_pursuit.py:113-119).
 START_EVENTS = ["handoff", "pass_outcome_caught", "run", "snap_direct"]
 FALLBACK_START_EVENT = "ball_snap"

@@ -68,6 +68,17 @@ def value_hash_pdf(pdf) -> str:
     return h.hexdigest()[:16]
 
 
+def create_views(con, sf_dir: str) -> None:
+    """One DuckDB view per table in ``TABLES`` over the parquet of ``sf_dir``."""
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        # Scale-study trees (scripts/gen_scale_data.py) are Spark-written
+        # directories; the driver tree is single files.
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = SF_DIR
@@ -96,13 +107,7 @@ def main() -> int:
 
         spark = get_spark("verify-local")
     con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        # Scale-study trees (scripts/gen_scale_data.py) are Spark-written
-        # directories; the driver tree is single files.
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    create_views(con, sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

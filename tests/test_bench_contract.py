@@ -10,7 +10,6 @@ adding a headline query can never silently truncate the artifact again.
 from __future__ import annotations
 
 import json
-import re
 from pathlib import Path
 
 BENCH_SRC = Path(__file__).resolve().parent.parent / "bench.py"

@@ -421,8 +421,6 @@ def test_ppr_hand_replay_and_broadcast_seed_plan(spark):
 
     # plan audit on the pre-checkpoint step: seed joins broadcast, and no
     # sort-merge join anywhere (the old full-outer fallback)
-    from pyspark.sql.functions import broadcast as _b
-
     ed = edges.join(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src"
     )
@@ -480,8 +478,6 @@ def test_copurchase_unknown_size_takes_scale_safe_arm(spark, monkeypatch, tmp_pa
     assert "Join" not in plan
 
 
-SF01 = "/root/testdata/sf0.01"
-
 # Every registered query over the customer<->supplier trading graph. sf0.01,
 # not sf0.001: graph_kcore_peel keeps no node at sf0.001.
 TRADING_GRAPH_QUERIES = [
@@ -499,36 +495,6 @@ TRADING_GRAPH_QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def verify_local(repo_root):
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "verify_local", repo_root / "scripts" / "verify_local.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-@pytest.fixture(scope="module")
-def sf01_duckdb():
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("customer", "supplier", "orders", "lineitem"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF01}/{t}.parquet'")
-    yield con
-    con.close()
-
-
 @pytest.mark.parametrize("name", TRADING_GRAPH_QUERIES)
-def test_trading_graph_query_matches_oracle(spark, sf01_duckdb, verify_local, name):
-    from nfl_big_data_bowl_2024_spark.plans import all_queries
-
-    spec = all_queries()[name]
-    got = spec.fn(spark, SF01).toPandas()
-    want = sf01_duckdb.execute(spec.oracle).df()
-    assert sorted(got.columns) == sorted(want.columns)
-    assert len(got) == len(want) > 0
-    assert verify_local.value_hash_pdf(got) == verify_local.value_hash_pdf(want)
+def test_trading_graph_query_matches_oracle(assert_matches_oracle, name):
+    assert_matches_oracle(name)

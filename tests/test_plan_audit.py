@@ -641,7 +641,6 @@ def test_every_oracle_parses_in_duckdb(queries):
     import duckdb
 
     con = duckdb.connect()
-    import pyarrow as pa
     import pyarrow.parquet  # noqa: F401
 
     for t in [

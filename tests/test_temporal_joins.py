@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from nfl_big_data_bowl_2024_spark.operators.temporal import asof_join, range_join_count
