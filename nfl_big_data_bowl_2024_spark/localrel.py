@@ -28,16 +28,22 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     ``schema`` is a StructType or DDL string. Supported field types are
     whatever ``pyspark.sql.pandas.types.to_arrow_schema`` maps — all the
     primitive and array types this repo's local relations use."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = list(rows)
+    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in schema.fields]
+    return local_columns_df(spark, cols, schema)
+
+
+def local_columns_df(spark: SparkSession, cols, schema: T.StructType) -> DataFrame:
+    """``local_df`` from one column per field: each a list or a numpy array
+    (numpy columns convert to Arrow without a per-row Python object)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
-    rows = list(rows)
-    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
     tbl = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
     return spark.createDataFrame(tbl, schema)

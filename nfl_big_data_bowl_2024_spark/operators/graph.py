@@ -4,8 +4,7 @@ recursive CTE).
 
 Operators, by fixpoint shape:
   - ``connected_components``: min-label flooding with a delta frontier and
-    pointer doubling, or a driver-local union-find (``_cc_union_find_local``)
-    for edge sets up to ``_DRIVER_CC_EDGE_ROWS``.
+    pointer doubling.
   - ``pagerank_integer``, ``pagerank_personalized_integer`` and
     ``hits_integer``: float-free numeric power iterations in integer
     micro-units.
@@ -18,6 +17,13 @@ Operators, by fixpoint shape:
 
 Every operator is integer arithmetic and set algebra with its round count
 part of its semantics, so a DuckDB oracle replays it bit-exactly.
+
+One driver-local arm: connected components and the five integer fixpoints
+(PageRank, LPA, k-core, personalized PageRank, HITS) run on the driver when
+their edge count is at most ``_DRIVER_LOCAL_EDGE_ROWS``. ``_local_graph``
+collects the edges once through Arrow, a ``_*_local`` replay runs the same
+integer rounds in numpy, and the result is a ``LocalTableScan``. Larger
+inputs take the distributed loop.
 
 Shared disciplines:
   - Bulk edge relations persist via ``_edges_on_disk`` (DISK_ONLY at
@@ -34,13 +40,18 @@ Shared disciplines:
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING, NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from ..localrel import local_df as _local_rel
+from ..localrel import local_columns_df
 from .scalars import checkpoint_counted
+
+if TYPE_CHECKING:  # numpy loads only when a driver-local arm runs
+    import numpy as np
 
 
 # Edge relations at or above this row count persist DISK_ONLY; below it
@@ -65,20 +76,30 @@ _IN_MEM_EDGE_ROWS = 20_000_000
 # the constant keeps both operators' gates in one place.
 _BROADCAST_NODE_SET_ROWS = 5_000_000
 
-# Edge sets at or below this row count run connected components as a
-# DRIVER-LOCAL union-find instead of the distributed fixpoint (r14).
-# Rationale: the iterative loop costs one job per round plus the edge
-# materialization machinery — measured 2.5-2.7 s at sf0.1 for a
-# 477-node near-dup graph, pure scheduling floor — while 500k edges are
-# ~8 MB as an Arrow transfer (two long columns) and union-find with
-# path compression over them runs well under a second on the driver.
-# This is a bounded driver-held model in the k-means-seed class, NOT an
-# unbounded driver loop: the gate fires on the exact count the operator
-# already has, and anything larger keeps the distributed path. The two
-# computations are provably identical (union by MIN root == min-label
-# fixpoint; pinned against each other on random graphs in
-# tests/test_graph.py).
-_DRIVER_CC_EDGE_ROWS = 500_000
+# Edge sets at or below this row count run on the DRIVER: connected
+# components and the five integer fixpoints (pagerank_integer,
+# label_propagation_mode, kcore_peel, pagerank_personalized_integer,
+# hits_integer) collect the materialized edges once (_local_graph) and
+# replay their rounds in numpy instead of paying one or more Spark jobs per
+# round. Rationale: at this size the distributed loops are pure scheduling
+# floor (CC: 2.5-2.7 s at sf0.1 for a 477-node near-dup graph; PageRank,
+# LPA and k-core: 16-23 jobs each over the 97k-edge sf0.01 trading graph),
+# while 500k edges are ~8 MB as an Arrow transfer and each numpy round is a
+# few vectorized passes over them. This is a bounded driver-held model in
+# the k-means-seed class, NOT an unbounded driver loop: the gate fires on
+# the exact count each operator already has, and anything larger keeps the
+# distributed path unchanged (the sf0.1 trading graph has 1.17M
+# symmetrized edges, sf10 117M).
+# Equivalence: each replay runs the distributed arm's rounds over the same
+# rows — the same node universe (e.g. PageRank and LPA rank/label only
+# sources; a node no contribution reaches drops out, an LPA node nothing
+# reaches resets to its own id), the same round count and early stops, and
+# the same integer arithmetic: int64 ``//`` for Spark's ``div`` of
+# non-negative operands, exact int64 sums (np.add.at, never a float64
+# weighted bincount), ties to the lowest id. Nodes are indexed in id order,
+# so a min over indexes is a min over ids. Pinned arm-against-arm on random
+# graphs in tests/test_graph.py.
+_DRIVER_LOCAL_EDGE_ROWS = 500_000
 
 
 def _edges_on_disk(
@@ -138,54 +159,77 @@ def _exchange_width(sc, n_rows: int, target_rows: int = 1_000_000) -> int:
     return max(sc.defaultParallelism, int(n_rows // target_rows) + 1)
 
 
-def _cc_union_find_local(spark, e: DataFrame) -> DataFrame:
-    """Driver-local connected components for a bounded edge relation:
-    union-find with path compression, union by MIN root — the root of
-    every tree is therefore the minimum node id of its component at all
-    times, so ``find(n)`` at the end equals exactly the distributed
-    min-label fixpoint's answer. Input ``e`` is the materialized
-    two-column (src, dst) relation; output is an Arrow-backed local
-    relation (LocalTableScan — no Python boundary on the consumer side)
-    with the input's node type preserved.
+class _LocalGraph(NamedTuple):
+    """An edge relation collected for the driver-local arm."""
 
-    A NULL endpoint matches the distributed arm: the edge joins nothing
-    (equi-joins never match NULL), its other endpoint is still a node,
-    and NULL itself is one node labelled NULL."""
+    nodes: "np.ndarray"  # sorted distinct endpoint ids, in the column dtype
+    src: "np.ndarray"  # first column's endpoint per edge: int32 index into nodes
+    dst: "np.ndarray"  # second column's endpoint per edge: int32 index into nodes
+    ftype: T.DataType  # the endpoints' Spark type
+
+
+def _local_graph(e: DataFrame, n_rows: int) -> "_LocalGraph | None":
+    """The one collect of the driver-local arm: the materialized two-column
+    edge relation ``e`` (``n_rows`` rows, counted by ``_edges_on_disk``) as
+    a ``_LocalGraph``, and ``e`` unpersisted. None leaves ``e`` persisted
+    for the distributed arm: above ``_DRIVER_LOCAL_EDGE_ROWS``, when the
+    endpoints are not one integer type, or when an endpoint is NULL (NULL
+    joins nothing on the distributed arm; the replays do not model it).
+
+    Lean temporaries (the driver's peak RSS is a benchmark metric): one
+    ``np.unique`` per endpoint column, not one over their concatenation,
+    int32 indexes, and the Arrow table dropped once converted."""
+    ftype = e.schema[0].dataType
+    if (
+        n_rows > _DRIVER_LOCAL_EDGE_ROWS
+        or not isinstance(ftype, T.IntegralType)
+        or e.schema[1].dataType != ftype
+    ):
+        return None
+    import numpy as np
+
     tbl = e.toArrow()
-    srcs = tbl.column("src").to_pylist()
-    dsts = tbl.column("dst").to_pylist()
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while x != r:  # path compression
-            parent[x], x = r, parent.get(x, x)
-        return r
-
-    for a, b in zip(srcs, dsts):
-        if a is None or b is None:
-            continue
-        ra, rb = find(a), find(b)
-        if ra == rb:
-            continue
-        if rb < ra:
-            ra, rb = rb, ra
-        parent[rb] = ra  # larger root under smaller: root stays the MIN
-    nodes = set(srcs)
-    nodes.update(dsts)
-    rows = sorted((n, find(n)) for n in nodes if n is not None)
-    if None in nodes:
-        rows.append((None, None))
-    ftype = e.schema["src"].dataType
-    schema = T.StructType(
-        [
-            T.StructField("node", ftype, True),
-            T.StructField("component", ftype, True),
-        ]
+    if tbl.column(0).null_count or tbl.column(1).null_count:
+        return None
+    x, y = tbl.column(0).to_numpy(), tbl.column(1).to_numpy()
+    del tbl
+    e.unpersist()
+    nodes = np.union1d(np.unique(x), np.unique(y))
+    return _LocalGraph(
+        nodes,
+        np.searchsorted(nodes, x).astype(np.int32),
+        np.searchsorted(nodes, y).astype(np.int32),
+        ftype,
     )
-    return _local_rel(spark, rows, schema)
+
+
+def _local_out(spark, *cols) -> DataFrame:
+    """A LocalTableScan over ``(name, spark_type, values)`` columns."""
+    schema = T.StructType([T.StructField(n, t, True) for n, t, _ in cols])
+    return local_columns_df(spark, [v for _, _, v in cols], schema)
+
+
+def _cc_local(spark, g: _LocalGraph, max_iter: int) -> DataFrame:
+    """connected_components' rounds on the driver. A distributed round is
+    a neighbor min over the delta frontier, which equals the min over
+    every neighbor (a node's label is already at most what each unchanged
+    neighbor last sent), then one pointer-doubling jump; labels only fall,
+    so lab[x] <= x and the jump's least() is the jumped label. Replayed as
+    such, with the same ``max_iter`` cap and stop-on-no-change."""
+    import numpy as np
+
+    lab = np.arange(len(g.nodes))
+    for _ in range(max_iter):
+        m = lab.copy()
+        np.minimum.at(m, g.src, lab[g.dst])
+        np.minimum.at(m, g.dst, lab[g.src])
+        m = m[m]
+        if np.array_equal(m, lab):
+            break
+        lab = m
+    return _local_out(
+        spark, ("node", g.ftype, g.nodes), ("component", g.ftype, g.nodes[lab])
+    )
 
 
 def connected_components(
@@ -223,13 +267,10 @@ def connected_components(
     e, n_e0 = _edges_on_disk(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
-    # Size-gated driver-local fast path (r14): a bounded edge set skips
-    # the whole iterative machinery — see _DRIVER_CC_EDGE_ROWS for the
-    # sizing rationale and equivalence argument.
-    if n_e0 <= _DRIVER_CC_EDGE_ROWS:
-        out = _cc_union_find_local(edges.sparkSession, e)
-        e.unpersist()
-        return out
+    # Size-gated driver-local arm: see _DRIVER_LOCAL_EDGE_ROWS.
+    g = _local_graph(e, n_e0)
+    if g is not None:
+        return _cc_local(edges.sparkSession, g, max_iter)
     # Symmetrize once; both directions are needed so a min label entering a
     # cluster anywhere can flow along every edge. Duplicate edges are left
     # in place — min() is idempotent over them, and a distinct() here would
@@ -339,6 +380,44 @@ def connected_components(
     return labels.select("node", F.col("lbl").alias("component"))
 
 
+def _rank_round(g: _LocalGraph, r, has, share_div):
+    """One integer PageRank message round on the driver: the sum of
+    ``r div outdeg`` each node receives from the sources holding a rank
+    row (``has``), and which nodes received any message."""
+    import numpy as np
+
+    live = has[g.src]
+    to = g.dst[live]
+    s = np.zeros(len(g.nodes), dtype=np.int64)
+    np.add.at(s, to, (r // share_div)[g.src[live]])
+    reached = np.zeros(len(g.nodes), dtype=bool)
+    reached[to] = True
+    return s, reached
+
+
+def _pagerank_local(spark, g: _LocalGraph, iters: int, damping_pct: int) -> DataFrame:
+    """pagerank_integer's rounds on the driver (see _DRIVER_LOCAL_EDGE_ROWS).
+    Ranked nodes start as the sources; after each round only the nodes a
+    contribution reached hold a rank row, and a node without out-edges
+    emits nothing."""
+    import numpy as np
+
+    outdeg = np.bincount(g.src, minlength=len(g.nodes))
+    n = max(int(np.count_nonzero(outdeg)), 1)  # an empty graph ranks nothing
+    base = (100 - damping_pct) * 1_000_000 // (100 * n)
+    has = outdeg > 0
+    r = np.full(len(g.nodes), 1_000_000 // n, dtype=np.int64)
+    share_div = np.maximum(outdeg, 1)
+    for _ in range(iters):
+        s, has = _rank_round(g, r, has, share_div)
+        r = base + damping_pct * s // 100
+    return _local_out(
+        spark,
+        ("node", g.ftype, g.nodes[has]),
+        ("rank_micro", T.LongType(), r[has]),
+    )
+
+
 def pagerank_integer(
     edges: DataFrame,
     src: str = "src",
@@ -376,6 +455,9 @@ def pagerank_integer(
     e, n_edges = _edges_on_disk(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
+    g = _local_graph(e, n_edges)
+    if g is not None:
+        return _pagerank_local(edges.sparkSession, g, iters, damping_pct)
     width = _exchange_width(sc, n_edges)
     # ONE materialization of the edge relation, pre-partitioned by src so
     # every iteration's message join reuses the partitioning (r13
@@ -394,7 +476,7 @@ def pagerank_integer(
     deg = ep.groupBy("src").agg(
         F.count(F.lit(1)).alias("outdeg")
     ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    n = deg.count()
+    n = max(deg.count(), 1)  # an empty graph ranks nothing
     e.unpersist()
     base = (100 - damping_pct) * 1_000_000 // (100 * n)
     r = deg.select(
@@ -583,6 +665,28 @@ def bfs_min_hops(
     return visited
 
 
+def _kcore_local(spark, g: _LocalGraph, k: int, rounds: int) -> DataFrame:
+    """kcore_peel's rounds on the driver (see _DRIVER_LOCAL_EDGE_ROWS): a
+    round drops every source whose surviving out-degree is below k with
+    every edge touching it, and the loop stops early once none is."""
+    import numpy as np
+
+    alive = np.ones(len(g.src), dtype=bool)
+    for _ in range(rounds):
+        deg = np.bincount(g.src[alive], minlength=len(g.nodes))
+        drop = (deg > 0) & (deg < k)
+        if not drop.any():
+            break
+        alive &= ~(drop[g.src] | drop[g.dst])
+    deg = np.bincount(g.src[alive], minlength=len(g.nodes))
+    keep = deg > 0
+    return _local_out(
+        spark,
+        ("node", g.ftype, g.nodes[keep]),
+        ("deg", T.LongType(), deg[keep].astype(np.int64)),
+    )
+
+
 def kcore_peel(
     edges: DataFrame, k: int = 2, rounds: int = 3, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -615,6 +719,9 @@ def kcore_peel(
     e0, n_e = _edges_on_disk(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
+    g = _local_graph(e0, n_e)
+    if g is not None:
+        return _kcore_local(edges.sparkSession, g, k, rounds)
     width = _exchange_width(sc, n_e)
     # r13 optimization: pre-partition the edge relation by src ONCE (the
     # pagerank/LP discipline) so every round's degree aggregate — and the
@@ -693,6 +800,44 @@ def kcore_peel(
     )
 
 
+def _lpa_local(spark, g: _LocalGraph, iters: int) -> DataFrame:
+    """label_propagation_mode's rounds on the driver (see
+    _DRIVER_LOCAL_EDGE_ROWS). The labelled nodes are the sources; each
+    round a node takes its most frequent arriving label, ties to the
+    lowest, and a node nothing arrives at resets to its own id."""
+    import numpy as np
+
+    n = len(g.nodes)
+    # int32 arithmetic whenever the keys below fit: half-size temporaries
+    dt = np.int32 if (len(g.src) + n) * n < 2**31 else np.int64
+    own = np.arange(n, dtype=dt)
+    lab = own
+    for _ in range(iters):
+        # (node, label) arrivals as sorted keys node * n + label, counted
+        # in place (np.unique would copy the edge-sized key array)
+        key = g.dst.astype(dt)
+        key *= n
+        key += lab[g.src]
+        key.sort()
+        new = np.ones(len(key), dtype=bool)
+        np.not_equal(key[1:], key[:-1], out=new[1:])
+        starts = np.flatnonzero(new)
+        cnt = np.diff(starts, append=len(key)).astype(dt)
+        key = key[starts]
+        del new, starts
+        # per node, the highest count, then the lowest label, wins:
+        # score = count * n + (n - 1 - label) < (edges + n) * n
+        best = np.full(n, -1, dtype=dt)
+        np.maximum.at(best, key // n, cnt * n + (n - 1 - key % n))
+        lab = np.where(best < 0, own, n - 1 - best % n)
+    srcs = np.unique(g.src)
+    return _local_out(
+        spark,
+        ("node", g.ftype, g.nodes[srcs]),
+        ("community", g.ftype, g.nodes[lab[srcs]]),
+    )
+
+
 def label_propagation_mode(
     edges: DataFrame,
     src: str = "src",
@@ -742,6 +887,9 @@ def label_propagation_mode(
     e, n_edges = _edges_on_disk(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
+    g = _local_graph(e, n_edges)
+    if g is not None:
+        return _lpa_local(edges.sparkSession, g, iters)
     parts = _exchange_width(sc, n_edges)
     # Re-persist the static edge relation ALREADY hash-partitioned by src
     # (in-memory when the now-known count is small): every round's
@@ -957,6 +1105,42 @@ def _ppr_step(
     return reached.unionByName(unreached)
 
 
+def _ppr_local(
+    spark, g: _LocalGraph, seeds: DataFrame, iters: int, damping_pct: int
+) -> DataFrame:
+    """pagerank_personalized_integer's rounds on the driver (see
+    _DRIVER_LOCAL_EDGE_ROWS). ``seeds`` is the one-column seed relation;
+    the seeds that are sources start with the mass and take the restart
+    mass back every round, reached or not; other nodes hold a rank row
+    only in a round some contribution reaches them."""
+    import numpy as np
+
+    ids = seeds.toArrow().column(0).drop_null().to_numpy()
+    outdeg = np.bincount(g.src, minlength=len(g.nodes))
+    is_seed = np.zeros(len(g.nodes), dtype=bool)
+    if len(g.nodes):
+        pos = np.minimum(np.searchsorted(g.nodes, ids), len(g.nodes) - 1)
+        is_seed[pos[g.nodes[pos] == ids]] = True
+    is_seed &= outdeg > 0
+    n_seeds = int(np.count_nonzero(is_seed))
+    if n_seeds == 0:
+        raise ValueError("personalized PageRank needs >= 1 seed node")
+    base = (100 - damping_pct) * 1_000_000 // (100 * n_seeds)
+    restart = np.where(is_seed, base, 0).astype(np.int64)
+    has = is_seed
+    r = np.full(len(g.nodes), 1_000_000 // n_seeds, dtype=np.int64)
+    share_div = np.maximum(outdeg, 1)
+    for _ in range(iters):
+        s, reached = _rank_round(g, r, has, share_div)
+        has = reached | is_seed
+        r = restart + damping_pct * s // 100
+    return _local_out(
+        spark,
+        ("node", g.ftype, g.nodes[has]),
+        ("rank_micro", T.LongType(), r[has]),
+    )
+
+
 def pagerank_personalized_integer(
     edges: DataFrame,
     seeds: DataFrame,
@@ -993,6 +1177,13 @@ def pagerank_personalized_integer(
     e, n_edges = _edges_on_disk(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
+    sd = seeds.select(F.col(seed_col).alias("node"))
+    # the local arm keeps the node type only when seeds share it (the
+    # distributed arm's union would widen it)
+    if sd.schema[0].dataType == e.schema[0].dataType:
+        g = _local_graph(e, n_edges)
+        if g is not None:
+            return _ppr_local(edges.sparkSession, g, sd, iters, damping_pct)
     width = _exchange_width(sc, n_edges)
     deg = (
         e.repartition(width, "src")
@@ -1000,7 +1191,7 @@ def pagerank_personalized_integer(
         .agg(F.count(F.lit(1)).alias("outdeg"))
         .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
-    sd = seeds.select(F.col(seed_col).alias("node")).distinct()
+    sd = sd.distinct()
     # seeds outside the graph carry restart mass but never emit (no
     # out-degree row) — keep only real nodes so |S| matches the oracle's
     sd = sd.join(
@@ -1028,6 +1219,36 @@ def pagerank_personalized_integer(
     ed.unpersist()
     sd.unpersist()
     return r.select("node", F.col("r").alias("rank_micro"))
+
+
+def _hits_local(spark, g: _LocalGraph, iters: int) -> DataFrame:
+    """hits_integer's rounds on the driver (see _DRIVER_LOCAL_EDGE_ROWS):
+    ``g.src`` are the hubs, ``g.dst`` the authorities, and each side's raw
+    sums divide by greatest(sum div 1e6, 1)."""
+    import numpy as np
+
+    def normalized(raw):
+        return raw // max(int(raw.sum()) // 1_000_000, 1)
+
+    h = np.full(len(g.nodes), 1_000_000, dtype=np.int64)
+    a = np.zeros(len(g.nodes), dtype=np.int64)
+    for _ in range(iters):
+        raw = np.zeros(len(g.nodes), dtype=np.int64)
+        np.add.at(raw, g.dst, h[g.src])
+        a = normalized(raw)
+        raw = np.zeros(len(g.nodes), dtype=np.int64)
+        np.add.at(raw, g.src, a[g.dst])
+        h = normalized(raw)
+    hub = np.unique(g.src)
+    auth = np.unique(g.dst)
+    flag = np.repeat(np.int32([0, 1]), [len(hub), len(auth)])
+    ids = g.nodes[np.concatenate([hub, auth])].astype(np.int64)
+    return _local_out(
+        spark,
+        ("is_supplier", T.IntegerType(), flag),
+        ("entity_id", T.LongType(), ids),
+        ("score_micro", T.LongType(), np.concatenate([h[hub], a[auth]])),
+    )
 
 
 def hits_integer(
@@ -1065,9 +1286,12 @@ def hits_integer(
     their final hub score, authorities with flag 1 and their final
     authority score.
     """
-    p, _n_p = _edges_on_disk(
+    p, n_p = _edges_on_disk(
         pairs.select(F.col(hub_col).alias("c"), F.col(auth_col).alias("s"))
     )
+    g = _local_graph(p, n_p)
+    if g is not None:
+        return _hits_local(pairs.sparkSession, g, iters)
     h = p.select("c").distinct().withColumn(
         "h", F.lit(1_000_000).cast("long")
     )

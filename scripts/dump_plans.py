@@ -145,11 +145,14 @@ SHOWCASE = [
     ),
     (
         "graph_pagerank_trading",
-        "Iterative integer fixpoint: the final plan hangs off the last "
-        "round's checkpointed rank blocks (Scan ExistingRDD — the 3 "
-        "edge-rank joins already ran eagerly); per round one src-keyed "
-        "shuffle join + one dst-keyed integer sum, float-free so the "
-        "DuckDB oracle replays it bit-exactly.",
+        "Iterative integer fixpoint on the driver-local arm: the 97k "
+        "symmetrized edges at sf0.01 are under the 500k-row gate, so they "
+        "are counted, collected once through Arrow and the 3 rounds "
+        "replayed in numpy — the final plan is one LocalTableScan "
+        "(Catalyst folds the entity projection into it). Above the gate "
+        "each round is one src-keyed shuffle join + one dst-keyed "
+        "integer sum; float-free "
+        "on both arms, so the DuckDB oracle replays it bit-exactly.",
     ),
     (
         "txt_bigram_lm_surprisal",
@@ -228,12 +231,13 @@ SHOWCASE = [
     ),
     (
         "graph_kcore_peel",
-        "Final round of the peel (earlier rounds ran as their own jobs "
-        "behind eager checkpoints): the surviving edge relation is a "
-        "Scan ExistingRDD feeding one grouped degree count — each "
-        "round's semi-joins are keyed on an edge set that only shrinks, "
-        "and the monotone-fixpoint early stop skips rounds that would "
-        "rewrite an unchanged edge set.",
+        "Fixed-round peel on the driver-local arm: the sf0.01 edge set "
+        "is under the 500k-row gate, so the rounds run in numpy over "
+        "one Arrow collect and the final plan is one LocalTableScan "
+        "(the entity projection folded in). Above the gate each round is one "
+        "grouped degree count + anti-joins on an edge set that only "
+        "shrinks; both arms take the monotone-fixpoint early stop once "
+        "no node falls below k.",
     ),
     (
         "stat_mann_whitney_u",
@@ -245,12 +249,13 @@ SHOWCASE = [
     ),
     (
         "graph_label_propagation",
-        "Final LPA round (round 1 ran as its own job behind an eager "
-        "checkpoint): the label vector is a Scan ExistingRDD joined to "
-        "the static edge relation on src, the (node, label) count "
+        "Synchronous mode LPA on the driver-local arm: the sf0.01 edge "
+        "set is under the 500k-row gate, so both rounds run in numpy "
+        "over one Arrow collect and the final plan is one "
+        "LocalTableScan (the entity projection folded in). Above the gate the label "
+        "vector joins the src-partitioned edges, the (node, label) count "
         "collapses map-side, and the per-node argmax is "
-        "max(struct(cnt, -lab)) — an ordinary hash aggregate, no "
-        "per-node Window/sort anywhere.",
+        "max(struct(cnt, -lab)) — a hash aggregate, no Window/sort.",
     ),
     (
         "stat_anova_oneway",

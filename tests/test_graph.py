@@ -8,7 +8,18 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+import nfl_big_data_bowl_2024_spark.operators.graph as G
 from nfl_big_data_bowl_2024_spark.operators.graph import connected_components
+
+
+def _on_both_arms(fn):
+    """``fn()`` on the driver-local arm, then with the size gate forced to
+    the distributed arm."""
+    local = fn()
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(G, "_DRIVER_LOCAL_EDGE_ROWS", -1)
+        dist = fn()
+    return local, dist
 
 
 def _components(spark, edge_list):
@@ -113,10 +124,12 @@ def test_pagerank_integer_matches_hand_replay(spark):
     edges = spark.createDataFrame(
         [(0, 2), (2, 0), (0, 4), (4, 0)], "src long, dst long"
     )
-    got = {
-        r["node"]: r["rank_micro"]
-        for r in pagerank_integer(edges, iters=3).collect()
-    }
+    arms = _on_both_arms(
+        lambda: {
+            r["node"]: r["rank_micro"]
+            for r in pagerank_integer(edges, iters=3).collect()
+        }
+    )
 
     deg = {0: 2, 2: 1, 4: 1}
     r = {n: 1_000_000 // 3 for n in deg}
@@ -124,9 +137,10 @@ def test_pagerank_integer_matches_hand_replay(spark):
     for _ in range(3):
         contrib = {0: r[2] // deg[2] + r[4] // deg[4], 2: r[0] // deg[0], 4: r[0] // deg[0]}
         r = {n: base + (85 * contrib[n]) // 100 for n in deg}
-    assert got == r
-    # the hub holds more mass than the leaves, and leaves tie exactly
-    assert got[0] > got[2] == got[4]
+    for got in arms:
+        assert got == r
+        # the hub holds more mass than the leaves, and leaves tie exactly
+        assert got[0] > got[2] == got[4]
 
 
 def test_triangle_counts_known_topologies(spark):
@@ -235,7 +249,13 @@ def _core(spark, edge_list, k, rounds=3):
 
     edges = spark.createDataFrame(edge_list, "src: long, dst: long")
     sym = edges.union(edges.selectExpr("dst as src", "src as dst"))
-    return {r["node"]: r["deg"] for r in kcore_peel(sym, k=k, rounds=rounds).collect()}
+    local, dist = _on_both_arms(
+        lambda: {
+            r["node"]: r["deg"] for r in kcore_peel(sym, k=k, rounds=rounds).collect()
+        }
+    )
+    assert local == dist
+    return local
 
 
 def test_kcore_triangle_with_pendant(spark):
@@ -279,10 +299,12 @@ def test_label_propagation_mode_hand_graph(spark):
     edges = spark.createDataFrame(
         und + [(b, a) for a, b in und], "src long, dst long"
     )
-    got = {
-        r["node"]: r["community"]
-        for r in label_propagation_mode(edges, iters=2).collect()
-    }
+    arms = _on_both_arms(
+        lambda: {
+            r["node"]: r["community"]
+            for r in label_propagation_mode(edges, iters=2).collect()
+        }
+    )
     # Round 1: all neighbor counts are 1, so the tie rule gives every
     # node its min neighbor label: {1:2, 2:1, 3:1, 10:3, 11:10, 12:10}.
     # Round 2 (hand-traced over those labels):
@@ -292,9 +314,10 @@ def test_label_propagation_mode_hand_graph(spark):
     #   10: nbrs {3->1, 11->10, 12->10} -> 10 (count 2)
     #   11: nbrs {10->3, 12->10}  tie   -> 3
     #   12: nbrs {10->3, 11->10}  tie   -> 3
-    assert set(got) == {1, 2, 3, 10, 11, 12}
-    assert got[1] == 1 and got[2] == 1 and got[3] == 1
-    assert got[10] == 10 and got[11] == 3 and got[12] == 3
+    for got in arms:
+        assert set(got) == {1, 2, 3, 10, 11, 12}
+        assert got[1] == 1 and got[2] == 1 and got[3] == 1
+        assert got[10] == 10 and got[11] == 3 and got[12] == 3
 
 
 def test_label_propagation_isolated_node_keeps_self_label(spark):
@@ -306,11 +329,13 @@ def test_label_propagation_isolated_node_keeps_self_label(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (7, 1)], "src long, dst long"
     )
-    got = {
-        r["node"]: r["community"]
-        for r in label_propagation_mode(edges, iters=2).collect()
-    }
-    assert got[7] == 7
+    for got in _on_both_arms(
+        lambda: {
+            r["node"]: r["community"]
+            for r in label_propagation_mode(edges, iters=2).collect()
+        }
+    ):
+        assert got[7] == 7
 
 
 def test_memory_discipline_helpers(spark):
@@ -390,12 +415,14 @@ def test_ppr_hand_replay_and_broadcast_seed_plan(spark):
     edges = spark.createDataFrame(edge_list, "src: long, dst: long")
     seeds = spark.createDataFrame([(1,), (2,), (3,)], "node: long")
 
-    got = {
-        r["node"]: r["rank_micro"]
-        for r in pagerank_personalized_integer(
-            edges, seeds, iters=3, damping_pct=85
-        ).collect()
-    }
+    arms = _on_both_arms(
+        lambda: {
+            r["node"]: r["rank_micro"]
+            for r in pagerank_personalized_integer(
+                edges, seeds, iters=3, damping_pct=85
+            ).collect()
+        }
+    )
 
     # pure-python integer replay (positive values: // == SQL div)
     outdeg: dict[int, int] = {}
@@ -417,7 +444,8 @@ def test_ppr_hand_replay_and_broadcast_seed_plan(spark):
             if s not in contrib:
                 nxt[s] = base
         r = nxt
-    assert got == r
+    for got in arms:
+        assert got == r
 
     # plan audit on the pre-checkpoint step: seed joins broadcast, and no
     # sort-merge join anywhere (the old full-outer fallback)
@@ -437,10 +465,8 @@ def test_ppr_hand_replay_and_broadcast_seed_plan(spark):
 def test_null_endpoints_match_across_cc_arms(spark, monkeypatch):
     """A NULL src or dst joins nothing on the distributed arm: the edge
     carries no connectivity, its other endpoint is still a node, and NULL
-    is one node labelled NULL. The driver-local union-find must give the
-    same rows."""
-    import nfl_big_data_bowl_2024_spark.operators.graph as G
-
+    is one node labelled NULL. With the size gate at its default the
+    driver-local arm declines such edges, so both runs give these rows."""
     edges = spark.createDataFrame(
         [(1, 2), (2, None), (None, 3), (3, 4), (None, None), (5, None)],
         "src long, dst long",
@@ -451,7 +477,7 @@ def test_null_endpoints_match_across_cc_arms(spark, monkeypatch):
         return sorted((tuple(r) for r in G.connected_components(edges).collect()), key=key)
 
     local = run()
-    monkeypatch.setattr(G, "_DRIVER_CC_EDGE_ROWS", -1)
+    monkeypatch.setattr(G, "_DRIVER_LOCAL_EDGE_ROWS", -1)
     dist = run()
     assert local == dist
     assert local == [(None, None), (1, 1), (2, 1), (3, 3), (4, 3), (5, 5)]
@@ -478,6 +504,64 @@ def test_copurchase_unknown_size_takes_scale_safe_arm(spark, monkeypatch, tmp_pa
     assert "Join" not in plan
 
 
+def _sorted_rows(df):
+    """(column types, rows sorted with NULLs last) of a DataFrame."""
+    key = lambda r: tuple((x is None, x or 0) for x in r)  # noqa: E731
+    return df.dtypes, sorted((tuple(r) for r in df.collect()), key=key)
+
+
+def test_fixpoint_arms_agree_on_random_graphs(spark):
+    """Each integer fixpoint's driver-local arm returns the distributed
+    arm's rows and column types on seeded random graphs with duplicate
+    edges, a self-loop, a dst-only node, int and long ids, and (last
+    graph) a NULL endpoint, which the local arm declines."""
+    rng = random.Random(10)
+    for trial, typ in enumerate(["long", "int", "long"]):
+        n = rng.randint(12, 40)
+        edge_list = [(rng.randrange(n), rng.randrange(n)) for _ in range(3 * n)]
+        edge_list += edge_list[:4] + [(1, 1), (2, n + 5)]
+        if trial == 2:
+            edge_list.append((None, 3))
+        edges = spark.createDataFrame(edge_list, f"src {typ}, dst {typ}")
+        sym = edges.union(edges.selectExpr("dst AS src", "src AS dst"))
+        seeds = spark.createDataFrame(
+            [(edge_list[0][0],), (2,), (n + 100,)], f"node {typ}"
+        )
+        ops = {
+            "pagerank": lambda: G.pagerank_integer(edges, iters=3),
+            "lpa": lambda: G.label_propagation_mode(sym, iters=3),
+            "kcore": lambda: G.kcore_peel(sym, k=3, rounds=3),
+            "ppr": lambda: G.pagerank_personalized_integer(edges, seeds, iters=3),
+            "hits": lambda: G.hits_integer(edges, "src", "dst", iters=2),
+        }
+        for name, op in ops.items():
+            local, dist = _on_both_arms(lambda: _sorted_rows(op()))
+            assert local == dist and local[1], f"{name}, graph {trial}"
+
+
+def test_fixpoints_over_empty_edges_return_no_rows(spark):
+    """An empty edge relation gives zero rows on both arms (PageRank used
+    to divide by its zero node count); personalized PageRank keeps its
+    zero-seed ValueError as its declared precondition."""
+    empty = spark.createDataFrame([], "src long, dst long")
+    ops = {
+        "cc": lambda: G.connected_components(empty),
+        "pagerank": lambda: G.pagerank_integer(empty),
+        "lpa": lambda: G.label_propagation_mode(empty),
+        "kcore": lambda: G.kcore_peel(empty),
+        "hits": lambda: G.hits_integer(empty, "src", "dst"),
+    }
+    for name, op in ops.items():
+        assert _on_both_arms(lambda: op().collect()) == ([], []), name
+    seeds = spark.createDataFrame([(1,)], "node long")
+
+    def ppr():
+        with pytest.raises(ValueError, match=">= 1 seed"):
+            G.pagerank_personalized_integer(empty, seeds)
+
+    _on_both_arms(ppr)
+
+
 # Every registered query over the customer<->supplier trading graph. sf0.01,
 # not sf0.001: graph_kcore_peel keeps no node at sf0.001.
 TRADING_GRAPH_QUERIES = [
@@ -497,4 +581,25 @@ TRADING_GRAPH_QUERIES = [
 
 @pytest.mark.parametrize("name", TRADING_GRAPH_QUERIES)
 def test_trading_graph_query_matches_oracle(assert_matches_oracle, name):
+    assert_matches_oracle(name)
+
+
+# The registered queries over the size-gated fixpoints: sf0.01 takes the
+# driver-local arm, so these force the distributed one. dedup_cluster_assign
+# stands for connected components.
+GATED_FIXPOINT_QUERIES = [
+    "graph_pagerank_trading",
+    "graph_kcore_peel",
+    "graph_label_propagation",
+    "graph_pagerank_personalized",
+    "graph_hits_integer",
+    "dedup_cluster_assign",
+]
+
+
+@pytest.mark.parametrize("name", GATED_FIXPOINT_QUERIES)
+def test_gated_fixpoint_distributed_arm_matches_oracle(
+    assert_matches_oracle, monkeypatch, name
+):
+    monkeypatch.setattr(G, "_DRIVER_LOCAL_EDGE_ROWS", -1)
     assert_matches_oracle(name)

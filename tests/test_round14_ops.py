@@ -111,11 +111,15 @@ def test_kcore_keyed_fallback_matches_and_ends_src_partitioned(spark, monkeypatc
     # dst, so post-fallback degree aggregates silently exchanged at the
     # conf-fixed width. Force the fallback (gate -> 0), check (a) results
     # identical to the broadcast path, (b) the terminal degree aggregate
-    # reads the persisted blocks with NO shuffle exchange above them.
+    # reads the persisted blocks with NO shuffle exchange above them. Both
+    # runs take the distributed arm: a graph this small would otherwise
+    # peel on the driver and plan as a LocalTableScan.
     import io
     from contextlib import redirect_stdout
 
     import nfl_big_data_bowl_2024_spark.operators.graph as g
+
+    monkeypatch.setattr(g, "_DRIVER_LOCAL_EDGE_ROWS", -1)
 
     edges = spark.createDataFrame(
         [(a, b) for a in range(1, 9) for b in range(1, 9) if a != b and (a + b) % 3]
@@ -245,7 +249,7 @@ def test_cc_driver_local_matches_distributed(spark, monkeypatch):
         local = sorted(
             tuple(r) for r in G.connected_components(df).collect()
         )
-        monkeypatch.setattr(G, "_DRIVER_CC_EDGE_ROWS", -1)
+        monkeypatch.setattr(G, "_DRIVER_LOCAL_EDGE_ROWS", -1)
         dist = sorted(
             tuple(r) for r in G.connected_components(df).collect()
         )
