@@ -18,18 +18,23 @@ Operators, by fixpoint shape:
 Every operator is integer arithmetic and set algebra with its round count
 part of its semantics, so a DuckDB oracle replays it bit-exactly.
 
-One driver-local arm: connected components and the five integer fixpoints
-(PageRank, LPA, k-core, personalized PageRank, HITS) run on the driver when
-their edge count is at most ``_DRIVER_LOCAL_EDGE_ROWS``. ``_local_graph``
-collects the edges once through Arrow, a ``_*_local`` replay runs the same
-integer rounds in numpy, and the result is a ``LocalTableScan``. Larger
-inputs take the distributed loop.
+One driver-local arm with two triggers: connected components and the five
+integer fixpoints (PageRank, LPA, k-core, personalized PageRank, HITS) run on
+the driver when their edge set is at most ``_DRIVER_LOCAL_EDGE_ROWS`` rows.
+``_gated_edges`` tries the pre-gate first: when Catalyst's size of the edge
+relation's input is at most the gate's 8 MB Arrow payload, one bounded
+``limit(gate + 1).toArrow()`` of the un-persisted relation is the arm's input,
+with no persist and no count. An unknown size (a LogicalRDD), a larger input,
+an overflowing collect or a NULL endpoint falls through to ``_edges_on_disk``,
+whose exact count is the second trigger. Either way ``_local_graph`` is the
+one collect, a ``_*_local`` replay runs the same integer rounds in numpy, and
+the result is a ``LocalTableScan``. Larger inputs take the distributed loop.
 
 Shared disciplines:
-  - Bulk edge relations persist via ``_edges_on_disk`` (DISK_ONLY at
-    unknown or large sizes, so cached edges never squeeze execution
-    memory), and exchanges whose per-task state scales with the edge count
-    take their width from ``_exchange_width``.
+  - Bulk edge relations of the distributed loops persist via
+    ``_edges_on_disk`` (DISK_ONLY at unknown or large sizes, so cached edges
+    never squeeze execution memory), and exchanges whose per-task state
+    scales with the edge count take their width from ``_exchange_width``.
   - ``localCheckpoint`` truncates the growing per-round state — without it
     the plan doubles per iteration and Catalyst analysis time explodes. It
     also drops lineage, so losing an executor mid-query is unrecoverable.
@@ -79,17 +84,24 @@ _BROADCAST_NODE_SET_ROWS = 5_000_000
 # Edge sets at or below this row count run on the DRIVER: connected
 # components and the five integer fixpoints (pagerank_integer,
 # label_propagation_mode, kcore_peel, pagerank_personalized_integer,
-# hits_integer) collect the materialized edges once (_local_graph) and
-# replay their rounds in numpy instead of paying one or more Spark jobs per
-# round. Rationale: at this size the distributed loops are pure scheduling
-# floor (CC: 2.5-2.7 s at sf0.1 for a 477-node near-dup graph; PageRank,
-# LPA and k-core: 16-23 jobs each over the 97k-edge sf0.01 trading graph),
-# while 500k edges are ~8 MB as an Arrow transfer and each numpy round is a
-# few vectorized passes over them. This is a bounded driver-held model in
-# the k-means-seed class, NOT an unbounded driver loop: the gate fires on
-# the exact count each operator already has, and anything larger keeps the
-# distributed path unchanged (the sf0.1 trading graph has 1.17M
-# symmetrized edges, sf10 117M).
+# hits_integer) collect the edges once (_local_graph) and replay their
+# rounds in numpy instead of paying one or more Spark jobs per round.
+# Rationale: at this size the distributed loops are pure scheduling floor
+# (CC: 2.5-2.7 s at sf0.1 for a 477-node near-dup graph; PageRank, LPA and
+# k-core: 16-23 jobs each over the 97k-edge sf0.01 trading graph), while
+# 500k edges are ~8 MB as an Arrow transfer and each numpy round is a few
+# vectorized passes over them. This is a bounded driver-held model in the
+# k-means-seed class, NOT an unbounded driver loop. One arm, two triggers
+# (_gated_edges), and the same row bound for both:
+#   - the pre-gate, before anything runs: Catalyst's input size of the edge
+#     relation is at most this many rows' two-int64 Arrow payload
+#     (x 16 bytes = 8 MB), and a bounded limit(gate + 1) collect returns at
+#     most this many rows;
+#   - the post-count trigger: the exact count _edges_on_disk takes of the
+#     persisted relation.
+# Unknown sizes decline the pre-gate, and anything both triggers decline
+# keeps the distributed path unchanged (the sf0.1 trading graph reads
+# 13.5 MB of orders/lineitem and has 1.17M symmetrized edges, sf10 117M).
 # Equivalence: each replay runs the distributed arm's rounds over the same
 # rows — the same node universe (e.g. PageRank and LPA rank/label only
 # sources; a node no contribution reaches drops out, an LPA node nothing
@@ -108,6 +120,12 @@ def _edges_on_disk(
     known_rows: "int | None" = None,
 ) -> tuple[DataFrame, int]:
     """Materialize an edge relation and return (df, row_count).
+
+    This is the large arm's entry: the gated fixpoints reach it through
+    ``_gated_edges`` only once the driver-local pre-gate has declined (an
+    unknown or over-8 MB input, an overflowing bounded collect, a NULL
+    endpoint), so a small edge set is never persisted or counted; the count
+    taken here is the gate's second trigger.
 
     Bulk edge relations must NOT occupy the in-memory storage pool: cached
     blocks inside the protected storage fraction cannot be evicted by
@@ -168,32 +186,68 @@ class _LocalGraph(NamedTuple):
     ftype: T.DataType  # the endpoints' Spark type
 
 
-def _local_graph(e: DataFrame, n_rows: int) -> "_LocalGraph | None":
-    """The one collect of the driver-local arm: the materialized two-column
-    edge relation ``e`` (``n_rows`` rows, counted by ``_edges_on_disk``) as
-    a ``_LocalGraph``, and ``e`` unpersisted. None leaves ``e`` persisted
-    for the distributed arm: above ``_DRIVER_LOCAL_EDGE_ROWS``, when the
-    endpoints are not one integer type, or when an endpoint is NULL (NULL
-    joins nothing on the distributed arm; the replays do not model it).
+def _input_bytes(df: DataFrame) -> int:
+    """Catalyst's ``sizeInBytes`` summed over the leaves of ``df``'s
+    optimized plan: the bytes of input evaluating ``df`` reads, known
+    before anything runs (file sizes for a parquet scan, rows x row width
+    for a LocalRelation). A leaf of unknown size, such as the LogicalRDD of
+    ``spark.createDataFrame(list)``, reports ``spark.sql.defaultSizeInBytes``
+    (Long.MaxValue), so an unknown input measures as large."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(
+        int(leaves.apply(i).stats().sizeInBytes())
+        for i in range(leaves.size())
+    )
+
+
+def _local_graph(e: DataFrame, n_rows: "int | None" = None) -> "_LocalGraph | None":
+    """The one collect of the driver-local arm: the two-column edge
+    relation ``e`` as a ``_LocalGraph``, or None for the distributed arm.
+    It declines when the endpoints are not one integer type, when an
+    endpoint is NULL (NULL joins nothing on the distributed arm; the
+    replays do not model it), and when ``e`` is over the gate. The gate has
+    two triggers:
+
+      - ``n_rows`` None (the pre-gate, before anything is materialized):
+        ``e``'s input must measure at most ``_DRIVER_LOCAL_EDGE_ROWS * 16``
+        bytes, the gate's own two-int64 Arrow payload (8 MB), and then one
+        ``limit(_DRIVER_LOCAL_EDGE_ROWS + 1).toArrow()`` of the un-persisted
+        relation must return at most the gate's rows. An unknown size
+        declines without running anything, and the byte bound caps what an
+        overflowing collect wastes at one evaluation over <= 8 MB of input.
+      - ``n_rows`` given (``e`` persisted and counted by ``_edges_on_disk``):
+        at most ``_DRIVER_LOCAL_EDGE_ROWS`` rows; ``e`` is unpersisted once
+        collected, and left persisted when declined.
 
     Lean temporaries (the driver's peak RSS is a benchmark metric): one
     ``np.unique`` per endpoint column, not one over their concatenation,
     int32 indexes, and the Arrow table dropped once converted."""
     ftype = e.schema[0].dataType
-    if (
-        n_rows > _DRIVER_LOCAL_EDGE_ROWS
-        or not isinstance(ftype, T.IntegralType)
-        or e.schema[1].dataType != ftype
-    ):
+    if not isinstance(ftype, T.IntegralType) or e.schema[1].dataType != ftype:
+        return None
+    if n_rows is None:
+        # Measured and collected through the limit's own plan: optimizing
+        # ``e``'s would fix that plan before a fallback persist, and the
+        # post-count collect of ``e`` would then recompute, not read, the
+        # persisted blocks.
+        bounded = e.limit(_DRIVER_LOCAL_EDGE_ROWS + 1)
+        if _input_bytes(bounded) > _DRIVER_LOCAL_EDGE_ROWS * 16:
+            return None
+        tbl = bounded.toArrow()
+        if tbl.num_rows > _DRIVER_LOCAL_EDGE_ROWS:
+            return None
+    elif n_rows > _DRIVER_LOCAL_EDGE_ROWS:
+        return None
+    else:
+        tbl = e.toArrow()
+    if tbl.column(0).null_count or tbl.column(1).null_count:
         return None
     import numpy as np
 
-    tbl = e.toArrow()
-    if tbl.column(0).null_count or tbl.column(1).null_count:
-        return None
     x, y = tbl.column(0).to_numpy(), tbl.column(1).to_numpy()
     del tbl
-    e.unpersist()
+    if n_rows is not None:
+        e.unpersist()
     nodes = np.union1d(np.unique(x), np.unique(y))
     return _LocalGraph(
         nodes,
@@ -201,6 +255,23 @@ def _local_graph(e: DataFrame, n_rows: int) -> "_LocalGraph | None":
         np.searchsorted(nodes, y).astype(np.int32),
         ftype,
     )
+
+
+def _gated_edges(
+    e: DataFrame,
+) -> "tuple[_LocalGraph, None, None] | tuple[None, DataFrame, int]":
+    """Route a gated fixpoint's two-column edge relation ``e``:
+    ``(graph, None, None)`` when either trigger of ``_local_graph`` takes
+    it to the driver, else ``(None, persisted e, its row count)`` from
+    ``_edges_on_disk`` for the distributed loop. The pre-gate runs first,
+    so a small input is one bounded collect with no persist and no count;
+    whatever it declines takes the post-count trigger unchanged."""
+    g = _local_graph(e)
+    if g is not None:
+        return g, None, None
+    e, n = _edges_on_disk(e)
+    g = _local_graph(e, n)
+    return (g, None, None) if g is not None else (None, e, n)
 
 
 def _local_out(spark, *cols) -> DataFrame:
@@ -256,19 +327,18 @@ def connected_components(
       - Convergence = no label changed, counted on the round's own
         checkpoint job — no row data to the driver.
     """
-    # Materialize the caller's edge relation ONCE before anything else:
-    # the symmetrizing union below references it twice, and Spark executes
-    # both union branches — for an LSH-derived edge source that meant the
-    # whole candidate-verify subtree ran twice inside the first job
-    # (measured at the generated sf10: 211 s -> 97 s for
-    # dedup_cluster_assign after this checkpoint). DISK_ONLY + size-aware
-    # widths per _edges_on_disk/_exchange_width.
+    # A small edge set goes to the driver-local arm (_gated_edges; see
+    # _DRIVER_LOCAL_EDGE_ROWS). Otherwise the caller's edge relation is
+    # materialized ONCE before anything else: the symmetrizing union below
+    # references it twice, and Spark executes both union branches — for an
+    # LSH-derived edge source that meant the whole candidate-verify subtree
+    # ran twice inside the first job (measured at the generated sf10:
+    # 211 s -> 97 s for dedup_cluster_assign after this checkpoint).
+    # DISK_ONLY + size-aware widths per _edges_on_disk/_exchange_width.
     sc = edges.sparkSession.sparkContext
-    e, n_e0 = _edges_on_disk(
+    g, e, n_e0 = _gated_edges(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
-    # Size-gated driver-local arm: see _DRIVER_LOCAL_EDGE_ROWS.
-    g = _local_graph(e, n_e0)
     if g is not None:
         return _cc_local(edges.sparkSession, g, max_iter)
     # Symmetrize once; both directions are needed so a min label entering a
@@ -452,10 +522,9 @@ def pagerank_integer(
     widths scale with the edge count (_edges_on_disk/_exchange_width).
     """
     sc = edges.sparkSession.sparkContext
-    e, n_edges = _edges_on_disk(
+    g, e, n_edges = _gated_edges(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
-    g = _local_graph(e, n_edges)
     if g is not None:
         return _pagerank_local(edges.sparkSession, g, iters, damping_pct)
     width = _exchange_width(sc, n_edges)
@@ -716,10 +785,9 @@ def kcore_peel(
     materialized, so at most two live at a time.
     """
     sc = edges.sparkSession.sparkContext
-    e0, n_e = _edges_on_disk(
+    g, e0, n_e = _gated_edges(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
-    g = _local_graph(e0, n_e)
     if g is not None:
         return _kcore_local(edges.sparkSession, g, k, rounds)
     width = _exchange_width(sc, n_e)
@@ -884,10 +952,9 @@ def label_propagation_mode(
         only their width scales with the data.
     """
     sc = edges.sparkSession.sparkContext
-    e, n_edges = _edges_on_disk(
+    g, e, n_edges = _gated_edges(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     )
-    g = _local_graph(e, n_edges)
     if g is not None:
         return _lpa_local(edges.sparkSession, g, iters)
     parts = _exchange_width(sc, n_edges)
@@ -1174,16 +1241,16 @@ def pagerank_personalized_integer(
     broadcast).
     """
     sc = edges.sparkSession.sparkContext
-    e, n_edges = _edges_on_disk(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    )
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     sd = seeds.select(F.col(seed_col).alias("node"))
     # the local arm keeps the node type only when seeds share it (the
     # distributed arm's union would widen it)
     if sd.schema[0].dataType == e.schema[0].dataType:
-        g = _local_graph(e, n_edges)
+        g, e, n_edges = _gated_edges(e)
         if g is not None:
             return _ppr_local(edges.sparkSession, g, sd, iters, damping_pct)
+    else:
+        e, n_edges = _edges_on_disk(e)
     width = _exchange_width(sc, n_edges)
     deg = (
         e.repartition(width, "src")
@@ -1286,10 +1353,9 @@ def hits_integer(
     their final hub score, authorities with flag 1 and their final
     authority score.
     """
-    p, n_p = _edges_on_disk(
+    g, p, _ = _gated_edges(
         pairs.select(F.col(hub_col).alias("c"), F.col(auth_col).alias("s"))
     )
-    g = _local_graph(p, n_p)
     if g is not None:
         return _hits_local(pairs.sparkSession, g, iters)
     h = p.select("c").distinct().withColumn(

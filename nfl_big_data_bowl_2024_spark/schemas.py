@@ -120,15 +120,56 @@ POSITION_LIMITS_SCHEMA = T.StructType(
 # Driver testdata star schema (TESTDATA.md) — read-only parquet
 # ---------------------------------------------------------------------------
 
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+
+def _nullable(**cols: T.DataType) -> T.StructType:
+    """A parquet table's schema: every column nullable, as a file scan
+    reports it whatever the schema it is given."""
+    return T.StructType([T.StructField(n, t, True) for n, t in cols.items()])
+
+
+_INT, _LONG, _DOUBLE, _STR, _TS = (
+    T.IntegerType(),
+    T.LongType(),
+    T.DoubleType(),
+    T.StringType(),
+    T.TimestampType(),
+)
+
+# Timestamps are declared TimestampType (instant semantics). That reads the
+# single-file trees' TIMESTAMP_NTZ columns (pyarrow ``timestamp[us]``
+# without a zone) and the LTZ columns of Spark-written copies alike, to the
+# same values under the pinned UTC session zone.
+TESTDATA_TABLES = {
+    "region": _nullable(r_regionkey=_INT, r_name=_STR),
+    "nation": _nullable(n_nationkey=_INT, n_name=_STR, n_regionkey=_INT),
+    "customer": _nullable(
+        c_custkey=_LONG, c_name=_STR, c_nationkey=_INT, c_acctbal=_DOUBLE,
+        c_mktsegment=_STR,
+    ),
+    "supplier": _nullable(
+        s_suppkey=_LONG, s_name=_STR, s_nationkey=_INT, s_acctbal=_DOUBLE
+    ),
+    "part": _nullable(
+        p_partkey=_LONG, p_name=_STR, p_brand=_STR, p_type=_STR, p_size=_INT,
+        p_retailprice=_DOUBLE,
+    ),
+    "orders": _nullable(
+        o_orderkey=_LONG, o_custkey=_LONG, o_orderstatus=_STR,
+        o_totalprice=_DOUBLE, o_orderdate=_TS, o_orderpriority=_STR,
+    ),
+    "lineitem": _nullable(
+        l_orderkey=_LONG, l_partkey=_LONG, l_suppkey=_LONG, l_linenumber=_INT,
+        l_quantity=_DOUBLE, l_extendedprice=_DOUBLE, l_discount=_DOUBLE,
+        l_tax=_DOUBLE, l_returnflag=_STR, l_linestatus=_STR, l_shipdate=_TS,
+    ),
+    "events": _nullable(
+        event_id=_LONG, ts=_TS, user_id=_LONG, event_type=_STR, value=_DOUBLE,
+        props=_STR,
+    ),
+    "documents": _nullable(
+        doc_id=_LONG, text=_STR, lang=_STR, source=_STR, n_chars=_LONG
+    ),
+    "embeddings": _nullable(
+        vec_id=_LONG, embedding=T.ArrayType(T.FloatType(), True), label=_INT
+    ),
+}

@@ -4,9 +4,12 @@ The reference re-reads every CSV from scratch on each of ~12k play iterations
 (reference optimal_pursuit.py:132-135,149 inside the loops of
 calculate_max_params.py:28 / calculate_YAP.py:28) and hand-picks the weekly
 tracking file as manual partition pruning. Here every table is read ONCE with
-an explicit schema; tracking is a Hive-partitioned dataset (``week=N/``) so
-Catalyst prunes partitions from ``WHERE week = N`` automatically, and gameId/
-playId predicates push down to parquet row groups.
+an explicit schema, so a read launches no schema-inference job. The one
+exception is the driver testdata's ``events`` table, whose ``ts`` may be
+NANOS or µs and so keeps the inferred read (``read_testdata_table``).
+Tracking is a Hive-partitioned dataset (``week=N/``) so Catalyst prunes
+partitions from ``WHERE week = N`` automatically, and gameId/playId
+predicates push down to parquet row groups.
 """
 
 from __future__ import annotations
@@ -61,34 +64,45 @@ def read_csv_with_corrupt_capture(
 
 
 def read_parquet_table(spark: SparkSession, name: str, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Parquet copy of a reference table with its declared schema: the
+    same never-infer rule as ``read_csv_table``."""
+    return spark.read.schema(_CSV_SCHEMAS[name]).parquet(path)
 
 
 def read_testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver-testdata parquet table, normalizing timestamp physics.
+    """Read one driver-testdata parquet table with its declared schema
+    (``schemas.TESTDATA_TABLES``), so building a plan over it launches no
+    schema-inference job.
 
-    Two parquet encodings in the testdata need session-independent handling
-    (the driver runs queries on its OWN SparkSession, so this cannot live in
-    session.py):
+    The declared ``TimestampType`` columns read both encodings the trees
+    hold: the single-file trees' TIMESTAMP_NTZ columns (e.g.
+    ``orders.o_orderdate``) and the LTZ columns of the Spark-written
+    ``scripts/gen_scale_data.py`` copies. The session timezone is pinned
+    UTC everywhere, so both read as the same instants.
 
-    - ``events.ts`` is TIMESTAMP(NANOS), which Spark 4 refuses by default
-      (PARQUET_TYPE_ILLEGAL). We read it as a long via
-      ``spark.sql.legacy.parquet.nanosAsLong`` and convert exactly with
-      integer ``div 1000`` (the generated values are µs-aligned; DuckDB's view
-      of the same file is a µs TIMESTAMP, so the two engines agree bit-for-bit
-      on epoch_us).
-    - ms-precision columns (e.g. ``orders.o_orderdate``) load as
-      TIMESTAMP_NTZ, on which ``unix_micros`` raises DATATYPE_MISMATCH; the
-      session timezone is pinned UTC everywhere, so casting NTZ -> TIMESTAMP
-      is instant-preserving and makes epoch arithmetic legal.
+    ``events`` alone keeps the inferred read. Its ``ts`` may be
+    TIMESTAMP(NANOS), which Spark 4 refuses by default
+    (PARQUET_TYPE_ILLEGAL), and no declared type reads NANOS and µs alike:
+    a ``TimestampType`` read fails on NANOS, and a ``LongType`` read gives
+    nanoseconds for one and microseconds for the other. So ``events`` is
+    read with ``spark.sql.legacy.parquet.nanosAsLong`` (set on the session
+    here because the driver runs queries on its OWN SparkSession) and
+    normalized by its inferred type: a NANOS long converts exactly with
+    integer ``div 1000`` (the generated values are µs-aligned; DuckDB's
+    view of the same file is a µs TIMESTAMP, so the two engines agree
+    bit-for-bit on epoch_us), and an NTZ ``ts`` casts to TIMESTAMP,
+    instant-preserving under UTC (``unix_micros`` rejects NTZ).
     """
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return spark.read.schema(schemas.TESTDATA_TABLES[name]).parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for fld in df.schema.fields:
-        if isinstance(fld.dataType, T.TimestampNTZType):
-            df = df.withColumn(fld.name, F.col(fld.name).cast("timestamp"))
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    df = spark.read.parquet(path)
+    ts = df.schema["ts"].dataType
+    if isinstance(ts, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

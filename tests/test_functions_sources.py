@@ -456,3 +456,135 @@ def test_yap_plan_runs_over_read_tracking(spark, tmp_path):
     )
     assert got == want
     assert any(r[-1] == "ok" for r in got)
+
+
+def _load_script(repo_root, rel):
+    """A script of the checkout (``scripts/…`` or ``perfbench/…``) as a
+    module."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        rel.replace("/", "_").removesuffix(".py"), repo_root / rel
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _inferred_schema(spark, path):
+    """A parquet table's inferred schema, normalized as the declared read
+    reports it: every column nullable, TIMESTAMP_NTZ as TIMESTAMP."""
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                T.TimestampType()
+                if isinstance(f.dataType, T.TimestampNTZType)
+                else f.dataType,
+                True,
+            )
+            for f in spark.read.parquet(path).schema.fields
+        ]
+    )
+
+
+def test_declared_testdata_schemas_equal_inferred(spark, verify_local, repo_root, tmp_path):
+    """Every testdata table's declared schema equals its normalized
+    inferred schema, on the single-file sf0.001 tree (TIMESTAMP_NTZ
+    columns) and on a Spark-written copy of it from
+    ``scripts/gen_scale_data.py --factor 2`` (LTZ columns); the declared
+    read gives the inferred read's rows on both."""
+    import os
+    import sys
+
+    from nfl_big_data_bowl_2024_spark import schemas
+    from nfl_big_data_bowl_2024_spark.sources.readers import read_testdata_table
+
+    src = os.path.join(os.path.dirname(verify_local.SF_DIR), "sf0.001")
+    gen = _load_script(repo_root, "scripts/gen_scale_data.py")
+    argv, width = sys.argv, spark.conf.get("spark.sql.shuffle.partitions")
+    sys.argv = ["gen_scale_data.py", f"--src={src}", f"--out={tmp_path}", "--factor=2"]
+    try:
+        assert gen.main() == 0
+    finally:  # the script's builder sets its width on this session
+        sys.argv = argv
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    for tree in (src, str(tmp_path)):
+        for name, declared in schemas.TESTDATA_TABLES.items():
+            path = f"{tree}/{name}.parquet"
+            got = read_testdata_table(spark, tree, name)
+            assert _inferred_schema(spark, path) == declared, (tree, name)
+            assert got.schema == declared, (tree, name)
+        for name in ("orders", "lineitem"):  # the timestamp columns
+            declared = schemas.TESTDATA_TABLES[name]
+            inferred = spark.read.parquet(f"{tree}/{name}.parquet").select(
+                [F.col(f.name).cast(f.dataType) for f in declared.fields]
+            )
+            got = read_testdata_table(spark, tree, name)
+            assert got.exceptAll(inferred).count() == 0, (tree, name)
+            assert inferred.exceptAll(got).count() == 0, (tree, name)
+
+
+def test_one_table_query_build_launches_no_job(spark, verify_local):
+    """With declared schemas, building a plan over a testdata table infers
+    nothing: the build of a one-table query launches no Spark job."""
+    import os
+
+    from nfl_big_data_bowl_2024_spark.plans import all_queries
+
+    sf = os.path.join(os.path.dirname(verify_local.SF_DIR), "sf0.001")
+    sc = spark.sparkContext
+    group = "one-table-build"
+    sc.setJobGroup(group, group)
+    try:
+        df = all_queries()["tpch_q6_forecast_revenue"].fn(spark, sf)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.collect()[0]["n_items"] > 0
+
+
+def test_nanos_events_ts_reads_as_microseconds(spark, verify_local, tmp_path):
+    """``events`` keeps the inferred read: a TIMESTAMP(NANOS) ``ts`` (as
+    some writers emit it) reads to the same µs instants as the testdata's
+    µs file."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nfl_big_data_bowl_2024_spark.sources.readers import read_testdata_table
+
+    sf = os.path.join(os.path.dirname(verify_local.SF_DIR), "sf0.001")
+    tbl = pq.read_table(f"{sf}/events.parquet")
+    i = tbl.schema.get_field_index("ts")
+    assert tbl.schema.field(i).type == pa.timestamp("us")
+    pq.write_table(
+        tbl.set_column(i, "ts", tbl.column(i).cast(pa.timestamp("ns"))),
+        str(tmp_path / "events.parquet"),
+    )
+    assert pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type.unit == "ns"
+    want = read_testdata_table(spark, sf, "events")
+    got = read_testdata_table(spark, str(tmp_path), "events")
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_season_dims_carry_their_declared_types(spark, repo_root, tmp_path):
+    """The ``season`` workload reads players, plays and tackles with the
+    declared reference schemas; the generator writes exactly those types,
+    so the declared read returns the inferred read's rows."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    import pyarrow.parquet as pq
+
+    from nfl_big_data_bowl_2024_spark.sources.readers import _CSV_SCHEMAS, read_parquet_table
+
+    _load_script(repo_root, "perfbench/gen_season.py").generate(3, str(tmp_path))
+    for name in ("players", "plays", "tackles"):
+        path = str(tmp_path / f"{name}.parquet")
+        assert pq.read_schema(path).types == to_arrow_schema(_CSV_SCHEMAS[name]).types
+        got = read_parquet_table(spark, name, path)
+        assert sorted(got.collect()) == sorted(spark.read.parquet(path).collect())

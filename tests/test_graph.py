@@ -510,11 +510,61 @@ def _sorted_rows(df):
     return df.dtypes, sorted((tuple(r) for r in df.collect()), key=key)
 
 
+def _on_gate_arms(spark, rows, schema, op):
+    """``op(edges)`` on each arm of the driver-local gate, as
+    ``{arm: (result, triggers)}``; ``triggers`` lists each ``_local_graph``
+    call as (trigger, took it). The arms:
+
+      - ``pre-gate``: edges from ``local_df``, a LocalRelation whose size
+        Catalyst knows, so the bounded collect runs before any persist;
+      - ``post-count``: edges from ``createDataFrame(list)``, a LogicalRDD of
+        unknown size, which the pre-gate declines without running anything,
+        so the ``_edges_on_disk`` count decides;
+      - ``distributed``: the gate forced to -1;
+      - ``overflow``: the LocalRelation edges with the byte measure patched
+        to 0 and the gate at one row, so the bounded collect runs, overflows
+        and falls through to the distributed arm."""
+    from nfl_big_data_bowl_2024_spark.localrel import local_df
+
+    real = G._local_graph
+
+    def run(edges, **patch):
+        log = []
+
+        def spy(e, n_rows=None):
+            g = real(e, n_rows)
+            log.append(("pre-gate" if n_rows is None else "post-count", g is not None))
+            return g
+
+        with pytest.MonkeyPatch.context() as m:
+            m.setattr(G, "_local_graph", spy)
+            for name, value in patch.items():
+                m.setattr(G, name, value)
+            return op(edges), log
+
+    known = local_df(spark, rows, schema)
+    return {
+        "pre-gate": run(known),
+        "post-count": run(spark.createDataFrame(rows, schema)),
+        "distributed": run(known, _DRIVER_LOCAL_EDGE_ROWS=-1),
+        "overflow": run(known, _input_bytes=lambda df: 0, _DRIVER_LOCAL_EDGE_ROWS=1),
+    }
+
+
+_LOCAL_TRIGGERS = {
+    "pre-gate": [("pre-gate", True)],
+    "post-count": [("pre-gate", False), ("post-count", True)],
+    "distributed": [("pre-gate", False), ("post-count", False)],
+    "overflow": [("pre-gate", False), ("post-count", False)],
+}
+
+
 def test_fixpoint_arms_agree_on_random_graphs(spark):
-    """Each integer fixpoint's driver-local arm returns the distributed
-    arm's rows and column types on seeded random graphs with duplicate
-    edges, a self-loop, a dst-only node, int and long ids, and (last
-    graph) a NULL endpoint, which the local arm declines."""
+    """Each integer fixpoint returns the same rows and column types on the
+    pre-gated collect, the post-count local arm, the distributed arm and an
+    overflowing pre-gated collect, on seeded random graphs with duplicate
+    edges, a self-loop, a dst-only node, int and long ids, and (last graph)
+    a NULL endpoint, which both local triggers decline."""
     rng = random.Random(10)
     for trial, typ in enumerate(["long", "int", "long"]):
         n = rng.randint(12, 40)
@@ -522,44 +572,82 @@ def test_fixpoint_arms_agree_on_random_graphs(spark):
         edge_list += edge_list[:4] + [(1, 1), (2, n + 5)]
         if trial == 2:
             edge_list.append((None, 3))
-        edges = spark.createDataFrame(edge_list, f"src {typ}, dst {typ}")
-        sym = edges.union(edges.selectExpr("dst AS src", "src AS dst"))
         seeds = spark.createDataFrame(
             [(edge_list[0][0],), (2,), (n + 100,)], f"node {typ}"
         )
+
+        def sym(edges):
+            return edges.union(edges.selectExpr("dst AS src", "src AS dst"))
+
         ops = {
-            "pagerank": lambda: G.pagerank_integer(edges, iters=3),
-            "lpa": lambda: G.label_propagation_mode(sym, iters=3),
-            "kcore": lambda: G.kcore_peel(sym, k=3, rounds=3),
-            "ppr": lambda: G.pagerank_personalized_integer(edges, seeds, iters=3),
-            "hits": lambda: G.hits_integer(edges, "src", "dst", iters=2),
+            "pagerank": lambda e: G.pagerank_integer(e, iters=3),
+            "lpa": lambda e: G.label_propagation_mode(sym(e), iters=3),
+            "kcore": lambda e: G.kcore_peel(sym(e), k=3, rounds=3),
+            "ppr": lambda e: G.pagerank_personalized_integer(e, seeds, iters=3),
+            "hits": lambda e: G.hits_integer(e, "src", "dst", iters=2),
         }
         for name, op in ops.items():
-            local, dist = _on_both_arms(lambda: _sorted_rows(op()))
+            arms = _on_gate_arms(
+                spark, edge_list, f"src {typ}, dst {typ}", lambda e: _sorted_rows(op(e))
+            )
+            local, dist = arms["post-count"][0], arms["distributed"][0]
             assert local == dist and local[1], f"{name}, graph {trial}"
+            for arm, (rows, triggers) in arms.items():
+                assert rows == local, f"{name}, graph {trial}, {arm}"
+                want = _LOCAL_TRIGGERS["distributed" if trial == 2 else arm]
+                assert triggers == want, f"{name}, graph {trial}, {arm}"
 
 
 def test_fixpoints_over_empty_edges_return_no_rows(spark):
-    """An empty edge relation gives zero rows on both arms (PageRank used
+    """An empty edge relation gives zero rows on every arm (PageRank used
     to divide by its zero node count); personalized PageRank keeps its
     zero-seed ValueError as its declared precondition."""
     empty = spark.createDataFrame([], "src long, dst long")
     ops = {
-        "cc": lambda: G.connected_components(empty),
-        "pagerank": lambda: G.pagerank_integer(empty),
-        "lpa": lambda: G.label_propagation_mode(empty),
-        "kcore": lambda: G.kcore_peel(empty),
-        "hits": lambda: G.hits_integer(empty, "src", "dst"),
+        "cc": lambda e: G.connected_components(e),
+        "pagerank": lambda e: G.pagerank_integer(e),
+        "lpa": lambda e: G.label_propagation_mode(e),
+        "kcore": lambda e: G.kcore_peel(e),
+        "hits": lambda e: G.hits_integer(e, "src", "dst"),
     }
     for name, op in ops.items():
-        assert _on_both_arms(lambda: op().collect()) == ([], []), name
+        assert _on_both_arms(lambda: op(empty).collect()) == ([], []), name
+        arms = _on_gate_arms(spark, [], "src long, dst long", lambda e: op(e).collect())
+        assert {arm: rows for arm, (rows, _) in arms.items()} == dict.fromkeys(arms, []), name
+        # zero rows never overflow, so the forced overflow stays local too
+        assert arms["pre-gate"][1] == arms["overflow"][1] == [("pre-gate", True)], name
     seeds = spark.createDataFrame([(1,)], "node long")
 
-    def ppr():
+    def ppr(e=empty):
         with pytest.raises(ValueError, match=">= 1 seed"):
-            G.pagerank_personalized_integer(empty, seeds)
+            G.pagerank_personalized_integer(e, seeds)
 
     _on_both_arms(ppr)
+    _on_gate_arms(spark, [], "src long, dst long", ppr)
+
+
+def test_small_trading_graph_runs_in_four_jobs_and_persists_nothing(spark, verify_local):
+    """Guard on the pre-gated arm: at sf0.001 ``graph_pagerank_trading``
+    builds and collects in at most 4 Spark jobs (the join's stages, the
+    bounded edge collect and the caller's collect; no schema inference, no
+    persist, no count), and its build leaves no RDD persisted."""
+    import os
+
+    from nfl_big_data_bowl_2024_spark.plans import all_queries
+
+    sf = os.path.join(os.path.dirname(verify_local.SF_DIR), "sf0.001")
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    group = "pagerank-small-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        df = all_queries()["graph_pagerank_trading"].fn(spark, sf)
+        assert set(sc._jsc.getPersistentRDDs().keySet()) - before == set()
+        assert len(df.toPandas()) > 0
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 4, jobs
 
 
 # Every registered query over the customer<->supplier trading graph. sf0.01,
